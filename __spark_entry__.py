@@ -4606,18 +4606,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r6 (guide §2.6): the two graphs' BFS chains are independent and
         # latency-bound — build them from two driver threads so one
         # chain's round jobs back-fill the other's; results identical
+        # (inheritable_thread_target keeps the caller's job group and tags)
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         with ThreadPoolExecutor(max_workers=2) as ex:
             fa = ex.submit(
-                lambda: A.bipartite_check(odd, seeds, max_depth=8).select(
-                    F.lit("odd_deltas").alias("graph"), "*"
+                inheritable_thread_target(spark)(
+                    lambda: A.bipartite_check(odd, seeds, max_depth=8).select(
+                        F.lit("odd_deltas").alias("graph"), "*"
+                    )
                 )
             )
             fb = ex.submit(
-                lambda: A.bipartite_check(
-                    odd.unionByName(chord), seeds, max_depth=8
-                ).select(F.lit("parity_chord").alias("graph"), "*")
+                inheritable_thread_target(spark)(
+                    lambda: A.bipartite_check(
+                        odd.unionByName(chord), seeds, max_depth=8
+                    ).select(F.lit("parity_chord").alias("graph"), "*")
+                )
             )
             return fa.result().unionByName(fb.result())
 

@@ -3643,7 +3643,7 @@ def lsh_eval(
     crossJoins — no collect."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import StorageLevel
+    from pyspark import StorageLevel, inheritable_thread_target
 
     # r6 (guide §2.6 overlap independent jobs): the candidate chain
     # (band membership → buckets → self-join) and the truth chain
@@ -3690,9 +3690,12 @@ def lsh_eval(
             df.unpersist()
         return out
 
+    # inheritable_thread_target: each thread's jobs keep the caller's
+    # job group and tags
+    spark = docs.sparkSession
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f_cand = ex.submit(_build_cand)
-        f_truth = ex.submit(_build_truth)
+        f_cand = ex.submit(inheritable_thread_target(spark)(_build_cand))
+        f_truth = ex.submit(inheritable_thread_target(spark)(_build_truth))
         cand, truth = f_cand.result(), f_truth.result()
     return _eval_counts_card(truth, cand, ["doc_a", "doc_b"])
 
@@ -4336,9 +4339,11 @@ def jaccard_prefix_pairs(
     # |candidates| x |tokens|: the original pair-x-token verify join
     # exploded to ~10^9 intermediate rows on a dense corpus (measured
     # 128 s at 5k docs / 31-word vocab; this form: see BENCH notes)
-    # the verify arrays are the SAME persisted docarr (struct equality
-    # on (df, tok) counts token-set intersections exactly — df is
-    # functionally dependent on tok)
+    # the verify arrays are the SAME persisted docarr's PLAIN string
+    # token array __arr, not the (df, tok) struct array __sa: both count
+    # token-set intersections exactly (df is functionally dependent on
+    # tok), but a struct array would lose array_intersect's hash-set
+    # fast path
     inter = (
         cand.join(
             docarr.select(F.col("doc_id").alias("doc_a"), F.col("__arr").alias("__aa")),
@@ -13122,6 +13127,8 @@ def dedup_agreement(
     identical."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     def _build_ja():
         handle: list = []
         out = (
@@ -13149,8 +13156,12 @@ def dedup_agreement(
             F.lit(1).alias("in_b"),
         ).localCheckpoint()
 
+    # inheritable_thread_target: each thread's jobs keep the caller's
+    # job group and tags
+    spark = docs.sparkSession
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f_ja, f_sp = ex.submit(_build_ja), ex.submit(_build_sp)
+        f_ja = ex.submit(inheritable_thread_target(spark)(_build_ja))
+        f_sp = ex.submit(inheritable_thread_target(spark)(_build_sp))
         ja, sp = f_ja.result(), f_sp.result()
     m = ja.join(sp, ["doc_a", "doc_b"], "outer").select(
         F.coalesce("in_a", F.lit(0)).alias("ia"),
@@ -15763,12 +15774,18 @@ def hub_removal_impact(
     # independent and latency-bound (max_depth eager checkpoint rounds
     # each) — building them from two driver threads lets round jobs of
     # one chain back-fill the other's stragglers.  Results identical;
-    # job descriptions are thread-local so the UI stays readable.
+    # job descriptions are thread-local so the UI stays readable;
+    # inheritable_thread_target keeps the caller's job group and tags.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    spark = edges.sparkSession
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f_full = ex.submit(card, "full", e, seeds)
-        f_cut = ex.submit(card, "hubs_removed", e_cut, seeds_cut)
+        f_full = ex.submit(inheritable_thread_target(spark)(card), "full", e, seeds)
+        f_cut = ex.submit(
+            inheritable_thread_target(spark)(card), "hubs_removed", e_cut, seeds_cut
+        )
         return f_full.result().unionByName(f_cut.result())
 
 

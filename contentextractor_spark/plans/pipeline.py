@@ -7,12 +7,21 @@ Plan shape — ONE narrow stage after ONE explicit shuffle:
                                                     hash ⇒ skewed hosts spread
                                                     uniformly (north rule:
                                                     salted repartitioning)
-      → mapInPandas(extract_batch)               ← Arrow-batched, iterator API;
+      → mapInPandas(_extract_batches)            ← Arrow-batched, iterator API;
                                                     all per-doc state stays in
                                                     the Python worker
       → write output + derive lineage            ← per-bucket metrics enable
                                                     idempotent resume by
                                                     anti-join
+
+Every bucketed page stage (extract_pages, extract_pdf_pages and the five
+DOM walkers: links, tables, lists, meta_robots, headings) is this shape,
+written once: `_bucketed_stage` is the keying + repartition + mapInPandas
+tail, and `_page_batches` is the one mapInPandas body.  The harness reads
+the partition id once per task, skips empty batches, keeps a NULL url
+NULL, turns NULL html into b"", and calls the stage's per-page function
+`rows(data) -> list[tuple]` inside the per-URL catch-all; `@_page_body`
+binds each per-page function to it under the stage's body name.
 
 Why this scales to 10^12 docs / 100 TB:
  - no wide aggregation, no join in the hot path — shuffle volume is exactly
@@ -25,11 +34,12 @@ Why this scales to 10^12 docs / 100 TB:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -41,7 +51,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .. import extractor
 from ..extractor import EXTRACTOR_VERSION, extract_document
+from ..operators import dom
+from ..operators.pdfparse import extract_pdf
 
 # Arrow batch sizing (SURVEY.md §4.2): default 10k rows/batch would hold
 # ~1 GB of raw HTML per in-flight batch — OOM risk; tiny batches pay a
@@ -171,70 +184,110 @@ def ensure_pyfiles(spark: SparkSession) -> None:
     _PYFILES_SHIPPED.add(key)
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body — runs on executors; one Arrow batch at a time so
-    per-batch memory stays bounded regardless of input partition size."""
+def _page_batches(
+    batches: Iterator[pd.DataFrame],
+    rows: Callable[[bytes], list[tuple]],
+    schema: StructType,
+    payload: str,
+) -> Iterator[pd.DataFrame]:
+    """The ONE bucketed mapInPandas body — runs on executors; one Arrow
+    batch at a time so per-batch memory stays bounded regardless of input
+    partition size.  Every page calls ``rows(data)`` (NULL payload → b"")
+    inside the per-URL catch-all, mirroring the reference's extractor
+    error contract (ContentExtractor.java:200-207): a page whose function
+    raises contributes zero rows.  Each returned tuple becomes one output
+    row (url, *tuple, bucket_id, partition_id) in ``schema``'s order."""
     from pyspark import TaskContext
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
+    columns = schema.fieldNames()[:-1]
 
     for pdf in batches:
-        n = len(pdf)
-        if n == 0:
+        if len(pdf) == 0:
             continue
-        rows = {
+        out: list[tuple] = []
+        for u, data, bucket in zip(pdf["url"], pdf[payload], pdf["bucket_id"]):
+            try:
+                found = rows(bytes(data) if data is not None else b"")
+            except Exception:  # noqa: BLE001 — per-URL catch-all
+                continue
             # astype(str) would turn a NULL url into the literal 'None',
             # corrupting output keys and lineage url ranges (r3 review)
-            "url": [None if u is None else str(u) for u in pdf["url"]],
-            "title": [],
-            "description": [],
-            "keywords": [],
-            "main_text": [],
-            "spans": [],
-            "keyword_list": [],
-            "threshold": [],
-            "status": [],
-        }
-        for data in pdf["html"]:
-            res = extract_document(bytes(data) if data is not None else b"")
-            rows["title"].append(res.title)
-            rows["description"].append(res.description)
-            rows["keywords"].append(res.keywords)
-            rows["main_text"].append(res.main_text)
-            rows["spans"].append(
-                [
-                    {
-                        "start_line": s[0],
-                        "end_line": s[1],
-                        "char_start": s[2],
-                        "char_end": s[3],
-                    }
-                    for s in res.spans
-                ]
-            )
-            rows["keyword_list"].append(res.keyword_list)
-            rows["threshold"].append(res.threshold)
-            rows["status"].append(res.status)
-        out = pd.DataFrame(rows)
-        out["bucket_id"] = pdf["bucket_id"].values
-        out["partition_id"] = pid
-        yield out
+            us = None if u is None else str(u)
+            out.extend((us, *r, bucket) for r in found)
+        if out:
+            frame = pd.DataFrame(out, columns=columns)
+            frame["partition_id"] = pid
+            yield frame
+
+
+def _page_body(schema: StructType, payload: str = "html"):
+    """Decorator: bind a per-page function ``rows(data) -> list[tuple]``
+    to _page_batches as the mapInPandas body of ``schema``.  The body
+    keeps the function's module-level name, so it pickles by reference
+    and can be swapped by name like any module global."""
+
+    def bind(rows):
+        @functools.wraps(rows)
+        def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            return _page_batches(batches, rows, schema, payload)
+
+        return body
+
+    return bind
+
+
+@_page_body(EXTRACT_SCHEMA)
+def _extract_batches(data: bytes) -> list[tuple]:
+    """mapInPandas body: page → ONE extraction row.  ``extract_document``
+    is this module's global, read per call, and keeps its D2 meta-charset
+    re-decode; it never raises (its own per-URL catch-all sets status)."""
+    res = extract_document(data)
+    spans = [
+        {"start_line": s[0], "end_line": s[1], "char_start": s[2], "char_end": s[3]}
+        for s in res.spans
+    ]
+    return [
+        (
+            res.title, res.description, res.keywords, res.main_text, spans,
+            res.keyword_list, res.threshold, res.status,
+        )
+    ]
+
+
+def _bucket_key(num_buckets: int) -> Column:
+    """pmod(xxhash64(url, SALT_SEED), n) as int — the ONE definition of
+    the bucket key.  salted_bucket (every bucketed stage, batch and
+    stream) and resume_filter both read it, so the salt-parity invariant
+    (resume_filter / read_committed_output must compute the same bucket
+    for the same url as the stage that wrote it) is structural, never
+    hand-synced copies (r3 session-2 review)."""
+    return F.pmod(F.xxhash64(F.col("url"), F.lit(SALT_SEED)), F.lit(num_buckets)).cast(
+        "int"
+    )
 
 
 def salted_bucket(df: DataFrame, payload_col: str, num_buckets: int) -> DataFrame:
-    """(url, payload) + bucket_id = pmod(xxhash64(url, SALT_SEED), n) — the
-    ONE definition of the bucket key.  extract_pages / extract_pdf_pages /
-    extract_links and both streaming stages share it, so the salt-parity
-    invariant (resume_filter / read_committed_output must compute the same
-    bucket for the same url as the stage that wrote it) is structural,
-    never four hand-synced copies (r3 session-2 review)."""
-    return df.select("url", payload_col).withColumn(
-        "bucket_id",
-        F.pmod(F.xxhash64(F.col("url"), F.lit(SALT_SEED)), F.lit(num_buckets)).cast(
-            "int"
-        ),
-    )
+    """(url, payload) + bucket_id = _bucket_key(num_buckets)."""
+    return df.select("url", payload_col).withColumn("bucket_id", _bucket_key(num_buckets))
+
+
+def _keyed_pages(df: DataFrame, payload_col: str, num_buckets: int) -> DataFrame:
+    """ensure_pyfiles + salted_bucket: the keying path shared by every
+    bucketed stage, batch (_bucketed_stage) and stream (stream_extract_*)."""
+    ensure_pyfiles(df.sparkSession)
+    return salted_bucket(df, payload_col, num_buckets)
+
+
+def _bucketed_stage(
+    df: DataFrame, payload_col: str, num_buckets: int, body, schema: StructType
+) -> DataFrame:
+    """The batch plan of every bucketed stage: keying → ONE salted
+    repartition on bucket_id → mapInPandas(body)."""
+    keyed = _keyed_pages(df, payload_col, num_buckets)
+    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
+    return partitioned.mapInPandas(body, schema=schema)
 
 
 def extract_pages(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
@@ -246,10 +299,7 @@ def extract_pages(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
     decorrelates from any upstream xxhash64 layout.  repartition() on the
     bucket column is the pipeline's only shuffle.
     """
-    ensure_pyfiles(pages.sparkSession)
-    keyed = salted_bucket(pages, "html", num_buckets)
-    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
-    return partitioned.mapInPandas(_extract_batches, schema=EXTRACT_SCHEMA)
+    return _bucketed_stage(pages, "html", num_buckets, _extract_batches, EXTRACT_SCHEMA)
 
 
 PDF_EXTRACT_SCHEMA = StructType(
@@ -265,32 +315,12 @@ PDF_EXTRACT_SCHEMA = StructType(
 )
 
 
-def _extract_pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_page_body(PDF_EXTRACT_SCHEMA, payload="pdf")
+def _extract_pdf_batches(data: bytes) -> list[tuple]:
     """mapInPandas body for PDF extraction — same bounded-batch discipline
     as _extract_batches (one Arrow batch of raw bytes in flight per task)."""
-    from pyspark import TaskContext
-
-    from ..operators.pdfparse import extract_pdf
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        rows: dict[str, list] = {"text": [], "n_pages": [], "n_objects": [], "status": []}
-        for data in pdf["pdf"]:
-            res = extract_pdf(bytes(data) if data is not None else b"")
-            rows["text"].append(res.text)
-            rows["n_pages"].append(res.n_pages)
-            rows["n_objects"].append(res.n_objects)
-            rows["status"].append(res.status)
-        out = pd.DataFrame(
-            {"url": [None if u is None else str(u) for u in pdf["url"]], **rows}
-        )
-        out["bucket_id"] = pdf["bucket_id"].values
-        out["partition_id"] = pid
-        yield out
+    res = extract_pdf(data)
+    return [(res.text, res.n_pages, res.n_objects, res.status)]
 
 
 def extract_pdf_pages(docs: DataFrame, num_buckets: int = 32) -> DataFrame:
@@ -303,10 +333,18 @@ def extract_pdf_pages(docs: DataFrame, num_buckets: int = 32) -> DataFrame:
     (operators/pdfparse.py, stdlib-only parser) — so every plan-level
     property argued there (bounded Arrow batches, skew spread, single
     shuffle) carries over unchanged."""
-    ensure_pyfiles(docs.sparkSession)
-    keyed = salted_bucket(docs, "pdf", num_buckets)
-    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
-    return partitioned.mapInPandas(_extract_pdf_batches, schema=PDF_EXTRACT_SCHEMA)
+    return _bucketed_stage(
+        docs, "pdf", num_buckets, _extract_pdf_batches, PDF_EXTRACT_SCHEMA
+    )
+
+
+def _parse_page(data: bytes):
+    """decode + parse shared by the five DOM walkers.  decode_html has NO
+    meta-charset recheck: only extract_document re-decodes on a declared
+    charset (D2), and each walker keeps exactly the input it always had
+    (D3 — do not unify the two decodes).  Both functions are read through
+    their modules per call."""
+    return dom.parse_xml(extractor.decode_html(data))
 
 
 LINKS_SCHEMA = StructType(
@@ -321,57 +359,19 @@ LINKS_SCHEMA = StructType(
 )
 
 
-def _extract_link_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_page_body(LINKS_SCHEMA)
+def _extract_link_batches(data: bytes) -> list[tuple]:
     """mapInPandas body: page → one row per <a href>, in DOCUMENT ORDER
     (the DOM walk is preorder DFS, so link_idx is layout-stable).  Same
     bounded-batch discipline as _extract_batches; a page that fails to
     decode or parse contributes zero links (per-URL catch-all, mirroring
     the reference's extractor error contract)."""
-    from pyspark import TaskContext
-
-    from ..extractor import decode_html
-    from ..operators.dom import parse_xml
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        urls: list = []
-        hrefs: list = []
-        anchors: list = []
-        idxs: list = []
-        buckets: list = []
-        for u, data, bucket in zip(pdf["url"], pdf["html"], pdf["bucket_id"]):
-            try:
-                html = decode_html(bytes(data) if data is not None else b"")
-                doc = parse_xml(html)
-                found = [
-                    (el.attr("href"), el.text())
-                    for el in doc.iter_elements()
-                    if el.tag == "a" and el.has_attr("href")
-                ]
-            except Exception:  # noqa: BLE001 — per-URL catch-all
-                found = []
-            us = None if u is None else str(u)
-            for i, (h, a) in enumerate(found):
-                urls.append(us)
-                hrefs.append(h)
-                anchors.append(a)
-                idxs.append(i)
-                buckets.append(bucket)
-        if urls:
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "href": hrefs,
-                    "anchor": anchors,
-                    "link_idx": idxs,
-                    "bucket_id": buckets,
-                    "partition_id": pid,
-                }
-            )
+    links = (
+        el
+        for el in _parse_page(data).iter_elements()
+        if el.tag == "a" and el.has_attr("href")
+    )
+    return [(el.attr("href"), el.text(), i) for i, el in enumerate(links)]
 
 
 def extract_links(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
@@ -381,10 +381,9 @@ def extract_links(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
     scan → ONE salted repartition → mapInPandas flat-map; output volume is
     links-per-page bounded per Arrow batch, and the flat-map never
     shuffles."""
-    ensure_pyfiles(pages.sparkSession)
-    keyed = salted_bucket(pages, "html", num_buckets)
-    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
-    return partitioned.mapInPandas(_extract_link_batches, schema=LINKS_SCHEMA)
+    return _bucketed_stage(
+        pages, "html", num_buckets, _extract_link_batches, LINKS_SCHEMA
+    )
 
 
 TABLES_SCHEMA = StructType(
@@ -416,7 +415,8 @@ def _own_table_descendants(el):
             )
 
 
-def _extract_table_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_page_body(TABLES_SCHEMA)
+def _extract_table_batches(data: bytes) -> list[tuple]:
     """mapInPandas body: page → one row per table CELL, in document order
     (tables numbered by preorder position — nested tables get their own
     index; rows by <tr> order within their table, cells by <td>/<th>
@@ -427,56 +427,17 @@ def _extract_table_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
     a cell that CONTAINS a nested table also includes that table's text
     (jsoup semantics).  A page that fails to decode or parse contributes
     zero rows (the extractor error contract)."""
-    from pyspark import TaskContext
-
-    from ..extractor import decode_html
-    from ..operators.dom import parse_xml
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        cols: dict[str, list] = {
-            k: []
-            for k in (
-                "url", "table_idx", "row_idx", "col_idx", "is_header",
-                "cell", "bucket_id",
+    out: list[tuple] = []
+    tables = (el for el in _parse_page(data).iter_elements() if el.tag == "table")
+    for t_idx, table in enumerate(tables):
+        trs = (n for n in _own_table_descendants(table) if n.tag == "tr")
+        for r_idx, tr in enumerate(trs):
+            cells = (n for n in _own_table_descendants(tr) if n.tag in ("td", "th"))
+            out.extend(
+                (t_idx, r_idx, c_idx, 1 if cell.tag == "th" else 0, cell.text())
+                for c_idx, cell in enumerate(cells)
             )
-        }
-        for u, data, bucket in zip(pdf["url"], pdf["html"], pdf["bucket_id"]):
-            try:
-                html = decode_html(bytes(data) if data is not None else b"")
-                doc = parse_xml(html)
-                tables = [
-                    el for el in doc.iter_elements() if el.tag == "table"
-                ]
-            except Exception:  # noqa: BLE001 — per-URL catch-all
-                tables = []
-            us = None if u is None else str(u)
-            for t_idx, table in enumerate(tables):
-                trs = [
-                    n for n in _own_table_descendants(table) if n.tag == "tr"
-                ]
-                for r_idx, tr in enumerate(trs):
-                    cells = [
-                        n
-                        for n in _own_table_descendants(tr)
-                        if n.tag in ("td", "th")
-                    ]
-                    for c_idx, cell in enumerate(cells):
-                        cols["url"].append(us)
-                        cols["table_idx"].append(t_idx)
-                        cols["row_idx"].append(r_idx)
-                        cols["col_idx"].append(c_idx)
-                        cols["is_header"].append(1 if cell.tag == "th" else 0)
-                        cols["cell"].append(cell.text())
-                        cols["bucket_id"].append(bucket)
-        if cols["url"]:
-            out = pd.DataFrame(cols)
-            out["partition_id"] = pid
-            yield out
+    return out
 
 
 def extract_tables(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
@@ -485,10 +446,9 @@ def extract_tables(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
     extract_links.  Identical scale shape to extract_pages: pruned scan →
     ONE salted repartition → mapInPandas flat-map; no shuffle after the
     flat-map, output volume bounded per Arrow batch."""
-    ensure_pyfiles(pages.sparkSession)
-    keyed = salted_bucket(pages, "html", num_buckets)
-    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
-    return partitioned.mapInPandas(_extract_table_batches, schema=TABLES_SCHEMA)
+    return _bucketed_stage(
+        pages, "html", num_buckets, _extract_table_batches, TABLES_SCHEMA
+    )
 
 
 LISTS_SCHEMA = StructType(
@@ -520,7 +480,8 @@ def _own_list_descendants(el):
             )
 
 
-def _extract_list_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_page_body(LISTS_SCHEMA)
+def _extract_list_batches(data: bytes) -> list[tuple]:
     """mapInPandas body: page → one row per list ITEM, in document order
     (lists numbered by preorder position over <ul>/<ol> — nested lists
     get their own list_idx; items by <li> order within their OWN list,
@@ -529,49 +490,12 @@ def _extract_list_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     that list's text (jsoup semantics — same rule as table cells).  A
     page that fails to decode or parse contributes zero rows (the
     extractor error contract)."""
-    from pyspark import TaskContext
-
-    from ..extractor import decode_html
-    from ..operators.dom import parse_xml
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        cols: dict[str, list] = {
-            k: []
-            for k in (
-                "url", "list_idx", "list_type", "item_idx", "item",
-                "bucket_id",
-            )
-        }
-        for u, data, bucket in zip(pdf["url"], pdf["html"], pdf["bucket_id"]):
-            try:
-                html = decode_html(bytes(data) if data is not None else b"")
-                doc = parse_xml(html)
-                lists = [
-                    el for el in doc.iter_elements() if el.tag in ("ul", "ol")
-                ]
-            except Exception:  # noqa: BLE001 — per-URL catch-all
-                lists = []
-            us = None if u is None else str(u)
-            for l_idx, lst in enumerate(lists):
-                items = [
-                    n for n in _own_list_descendants(lst) if n.tag == "li"
-                ]
-                for i_idx, li in enumerate(items):
-                    cols["url"].append(us)
-                    cols["list_idx"].append(l_idx)
-                    cols["list_type"].append(lst.tag)
-                    cols["item_idx"].append(i_idx)
-                    cols["item"].append(li.text())
-                    cols["bucket_id"].append(bucket)
-        if cols["url"]:
-            out = pd.DataFrame(cols)
-            out["partition_id"] = pid
-            yield out
+    out: list[tuple] = []
+    lists = (el for el in _parse_page(data).iter_elements() if el.tag in ("ul", "ol"))
+    for l_idx, lst in enumerate(lists):
+        items = (n for n in _own_list_descendants(lst) if n.tag == "li")
+        out.extend((l_idx, lst.tag, i_idx, li.text()) for i_idx, li in enumerate(items))
+    return out
 
 
 def extract_lists(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
@@ -581,10 +505,9 @@ def extract_lists(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
     extract_headings.  Identical scale shape to extract_pages: pruned
     scan → ONE salted repartition → mapInPandas flat-map; no shuffle
     after the flat-map, output volume bounded per Arrow batch."""
-    ensure_pyfiles(pages.sparkSession)
-    keyed = salted_bucket(pages, "html", num_buckets)
-    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
-    return partitioned.mapInPandas(_extract_list_batches, schema=LISTS_SCHEMA)
+    return _bucketed_stage(
+        pages, "html", num_buckets, _extract_list_batches, LISTS_SCHEMA
+    )
 
 
 META_ROBOTS_SCHEMA = StructType(
@@ -599,9 +522,8 @@ META_ROBOTS_SCHEMA = StructType(
 )
 
 
-def _extract_meta_robots_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+@_page_body(META_ROBOTS_SCHEMA)
+def _extract_meta_robots_batches(data: bytes) -> list[tuple]:
     """mapInPandas body: page → ONE row with its robots-meta verdict.
     Directive semantics (the robots-meta convention): tokens are
     comma-separated, trimmed, case-insensitive; 'none' ≡ noindex,
@@ -611,49 +533,20 @@ def _extract_meta_robots_batches(
     page that fails to decode/parse contributes zero rows (the
     extractor error contract — a crashed page must not read as
     'indexable')."""
-    from pyspark import TaskContext
-
-    from ..extractor import decode_html
-    from ..operators.dom import parse_xml
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        cols: dict[str, list] = {
-            k: [] for k in ("url", "noindex", "nofollow", "content", "bucket_id")
-        }
-        for u, data, bucket in zip(pdf["url"], pdf["html"], pdf["bucket_id"]):
-            try:
-                html = decode_html(bytes(data) if data is not None else b"")
-                doc = parse_xml(html)
-                contents = [
-                    el.attr("content")
-                    for el in doc.iter_elements()
-                    if el.tag == "meta"
-                    and el.attr("name").strip().lower() == "robots"
-                ]
-            except Exception:  # noqa: BLE001 — per-URL catch-all
-                continue
-            noindex = nofollow = 0
-            for c in contents:
-                for tok in (c or "").split(","):
-                    t = tok.strip().lower()
-                    if t in ("noindex", "none"):
-                        noindex = 1
-                    if t in ("nofollow", "none"):
-                        nofollow = 1
-            cols["url"].append(None if u is None else str(u))
-            cols["noindex"].append(noindex)
-            cols["nofollow"].append(nofollow)
-            cols["content"].append(contents[0] if contents else None)
-            cols["bucket_id"].append(bucket)
-        if cols["url"]:
-            out = pd.DataFrame(cols)
-            out["partition_id"] = pid
-            yield out
+    contents = [
+        el.attr("content")
+        for el in _parse_page(data).iter_elements()
+        if el.tag == "meta" and el.attr("name").strip().lower() == "robots"
+    ]
+    noindex = nofollow = 0
+    for c in contents:
+        for tok in (c or "").split(","):
+            t = tok.strip().lower()
+            if t in ("noindex", "none"):
+                noindex = 1
+            if t in ("nofollow", "none"):
+                nofollow = 1
+    return [(noindex, nofollow, contents[0] if contents else None)]
 
 
 def extract_meta_robots(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
@@ -662,11 +555,8 @@ def extract_meta_robots(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
     robots.txt path gate (analysis.apply_robots): corpora that honor
     noindex filter on this column before training.  Same scale shape as
     extract_pages: salted repartition → mapInPandas, no shuffle after."""
-    ensure_pyfiles(pages.sparkSession)
-    keyed = salted_bucket(pages, "html", num_buckets)
-    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
-    return partitioned.mapInPandas(
-        _extract_meta_robots_batches, schema=META_ROBOTS_SCHEMA
+    return _bucketed_stage(
+        pages, "html", num_buckets, _extract_meta_robots_batches, META_ROBOTS_SCHEMA
     )
 
 
@@ -682,10 +572,11 @@ HEADINGS_SCHEMA = StructType(
     ]
 )
 
+_HEADING_LEVELS = {f"h{i}": i for i in range(1, 7)}
 
-def _extract_heading_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+
+@_page_body(HEADINGS_SCHEMA)
+def _extract_heading_batches(data: bytes) -> list[tuple]:
     """mapInPandas body: page → one row per h1–h6 heading in document
     (preorder) order, with OUTLINE numbering: per-level counters — a
     level-L heading increments counter[L], resets counters below, and
@@ -696,51 +587,18 @@ def _extract_heading_batches(
     oracle replays).  Heading text is jsoup-normalized Element.text().
     A page that fails to decode or parse contributes zero rows (the
     extractor error contract)."""
-    from pyspark import TaskContext
-
-    from ..extractor import decode_html
-    from ..operators.dom import parse_xml
-
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    tags = {f"h{i}": i for i in range(1, 7)}
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        cols: dict[str, list] = {
-            k: []
-            for k in ("url", "h_idx", "level", "sec", "text", "bucket_id")
-        }
-        for u, data, bucket in zip(pdf["url"], pdf["html"], pdf["bucket_id"]):
-            try:
-                html = decode_html(bytes(data) if data is not None else b"")
-                doc = parse_xml(html)
-                heads = [
-                    (tags[el.tag], el.text())
-                    for el in doc.iter_elements()
-                    if el.tag in tags
-                ]
-            except Exception:  # noqa: BLE001 — per-URL catch-all
-                heads = []
-            us = None if u is None else str(u)
-            counters = [0] * 7
-            for h_idx, (level, text) in enumerate(heads):
-                counters[level] += 1
-                for i in range(level + 1, 7):
-                    counters[i] = 0
-                cols["url"].append(us)
-                cols["h_idx"].append(h_idx)
-                cols["level"].append(level)
-                cols["sec"].append(
-                    ".".join(str(counters[i]) for i in range(1, level + 1))
-                )
-                cols["text"].append(text)
-                cols["bucket_id"].append(bucket)
-        if cols["url"]:
-            out = pd.DataFrame(cols)
-            out["partition_id"] = pid
-            yield out
+    heads = [
+        (_HEADING_LEVELS[el.tag], el.text())
+        for el in _parse_page(data).iter_elements()
+        if el.tag in _HEADING_LEVELS
+    ]
+    out: list[tuple] = []
+    counters = [0] * 7
+    for h_idx, (level, text) in enumerate(heads):
+        counters[level] += 1
+        counters[level + 1:] = [0] * (6 - level)
+        out.append((h_idx, level, ".".join(map(str, counters[1:level + 1])), text))
+    return out
 
 
 def extract_headings(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
@@ -750,11 +608,8 @@ def extract_headings(pages: DataFrame, num_buckets: int = 32) -> DataFrame:
     RAG/training windows) and per-section dedup.  Same scale shape as
     extract_pages: pruned scan → ONE salted repartition → mapInPandas
     flat-map, no shuffle after."""
-    ensure_pyfiles(pages.sparkSession)
-    keyed = salted_bucket(pages, "html", num_buckets)
-    partitioned = keyed.repartition(num_buckets, F.col("bucket_id"))
-    return partitioned.mapInPandas(
-        _extract_heading_batches, schema=HEADINGS_SCHEMA
+    return _bucketed_stage(
+        pages, "html", num_buckets, _extract_heading_batches, HEADINGS_SCHEMA
     )
 
 
@@ -946,12 +801,7 @@ def resume_filter(
         .select("bucket_id")
         .distinct()
     )
-    keyed = pages.withColumn(
-        "bucket_id",
-        F.pmod(F.xxhash64(F.col("url"), F.lit(SALT_SEED)), F.lit(num_buckets)).cast(
-            "int"
-        ),
-    )
+    keyed = pages.withColumn("bucket_id", _bucket_key(num_buckets))
     return keyed.join(F.broadcast(done), "bucket_id", "left_anti").drop("bucket_id")
 
 
@@ -1138,7 +988,7 @@ def _debug_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     threshold = res.threshold
             except Exception as e:  # noqa: BLE001
                 status = f"error:{type(e).__name__}"
-            out["url"].append(str(url))
+            out["url"].append(None if url is None else str(url))
             out["density"].append(density)
             out["blocks"].append(blocks)
             out["threshold"].append(threshold)

@@ -32,8 +32,17 @@ from pyspark.sql.types import (
 from ..functions.events import _value_cents
 from ..plans.pipeline import (
     EXTRACT_SCHEMA,
+    HEADINGS_SCHEMA,
+    LINKS_SCHEMA,
+    LISTS_SCHEMA,
     PAGES_SCHEMA,
+    TABLES_SCHEMA,
     _extract_batches,
+    _extract_heading_batches,
+    _extract_link_batches,
+    _extract_list_batches,
+    _extract_table_batches,
+    _keyed_pages,
 )
 
 
@@ -48,16 +57,18 @@ def read_pages_stream(
     )
 
 
+# Every stream_extract_* below keys pages through pipeline._keyed_pages —
+# the batch path's ensure_pyfiles + salted_bucket, so salt parity with
+# resume_filter / read_committed_output is structural — and then runs the
+# batch stage's own mapInPandas body.  Unlike the batch plan there is no
+# repartition: each micro-batch maps where it lands.
+
+
 def stream_extract(pages_stream: DataFrame, num_buckets: int = 32) -> DataFrame:
     """Streaming extraction: identical semantics to the batch stage — the
     same _extract_batches function — so batch/stream parity is by
     construction (tested in tests/test_streaming.py)."""
-    from ..plans.pipeline import ensure_pyfiles, salted_bucket
-
-    ensure_pyfiles(pages_stream.sparkSession)
-    # salted_bucket IS the batch path's keying — salt parity with
-    # resume_filter / read_committed_output is structural
-    keyed = salted_bucket(pages_stream, "html", num_buckets)
+    keyed = _keyed_pages(pages_stream, "html", num_buckets)
     return keyed.mapInPandas(_extract_batches, schema=EXTRACT_SCHEMA)
 
 
@@ -65,15 +76,7 @@ def stream_extract_links(pages_stream: DataFrame, num_buckets: int = 32) -> Data
     """Streaming link extraction: the SAME _extract_link_batches flat-map
     as the batch stage, so the host link graph can be fed incrementally as
     pages land (batch/stream parity by construction, tested)."""
-    from ..plans.pipeline import (
-        LINKS_SCHEMA,
-        _extract_link_batches,
-        ensure_pyfiles,
-        salted_bucket,
-    )
-
-    ensure_pyfiles(pages_stream.sparkSession)
-    keyed = salted_bucket(pages_stream, "html", num_buckets)
+    keyed = _keyed_pages(pages_stream, "html", num_buckets)
     return keyed.mapInPandas(_extract_link_batches, schema=LINKS_SCHEMA)
 
 
@@ -82,15 +85,7 @@ def stream_extract_tables(pages_stream: DataFrame, num_buckets: int = 32) -> Dat
     flat-map as the batch stage (plans.pipeline.extract_tables), so
     structured-table feeds build incrementally as pages land —
     batch/stream parity by construction, tested."""
-    from ..plans.pipeline import (
-        TABLES_SCHEMA,
-        _extract_table_batches,
-        ensure_pyfiles,
-        salted_bucket,
-    )
-
-    ensure_pyfiles(pages_stream.sparkSession)
-    keyed = salted_bucket(pages_stream, "html", num_buckets)
+    keyed = _keyed_pages(pages_stream, "html", num_buckets)
     return keyed.mapInPandas(_extract_table_batches, schema=TABLES_SCHEMA)
 
 
@@ -100,15 +95,7 @@ def stream_extract_lists(pages_stream: DataFrame, num_buckets: int = 32) -> Data
     per-page state inside one flat-map row-group, so incremental arrival
     cannot change any page's rows; batch/stream parity by construction,
     tested."""
-    from ..plans.pipeline import (
-        LISTS_SCHEMA,
-        _extract_list_batches,
-        ensure_pyfiles,
-        salted_bucket,
-    )
-
-    ensure_pyfiles(pages_stream.sparkSession)
-    keyed = salted_bucket(pages_stream, "html", num_buckets)
+    keyed = _keyed_pages(pages_stream, "html", num_buckets)
     return keyed.mapInPandas(_extract_list_batches, schema=LISTS_SCHEMA)
 
 
@@ -120,15 +107,7 @@ def stream_extract_headings(
     Outline numbering is per-page state inside one flat-map row-group, so
     incremental arrival cannot change any page's numbering — parity by
     construction, tested."""
-    from ..plans.pipeline import (
-        HEADINGS_SCHEMA,
-        _extract_heading_batches,
-        ensure_pyfiles,
-        salted_bucket,
-    )
-
-    ensure_pyfiles(pages_stream.sparkSession)
-    keyed = salted_bucket(pages_stream, "html", num_buckets)
+    keyed = _keyed_pages(pages_stream, "html", num_buckets)
     return keyed.mapInPandas(_extract_heading_batches, schema=HEADINGS_SCHEMA)
 
 

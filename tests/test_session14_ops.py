@@ -728,6 +728,34 @@ def test_hub_removal_seed_is_hub(spark):
     assert out["hubs_removed"]["n_reached"] == 0
 
 
+def test_hub_removal_thread_jobs_keep_caller_job_group(spark):
+    # the two BFS chains run on pool threads: every job the call starts,
+    # on either thread, must carry the caller's job group — job ids are
+    # sequential, so the ids between two marker jobs are exactly the
+    # call's jobs
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup(group))
+
+    e = _edges(spark, [(9, 0)] + [(0, i) for i in range(1, 9)])
+    seeds = spark.createDataFrame([(9,)], "node long")
+    try:
+        first = marker("hub_thread_before")
+        sc.setJobGroup("hub_thread_call", "hub_thread_call")
+        A.hub_removal_impact(e, seeds, k=1, max_depth=4)
+        last = marker("hub_thread_after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    call_jobs = set(tracker.getJobIdsForGroup("hub_thread_call"))
+    assert call_jobs == set(range(first + 1, last))
+
+
 # ------------------------------------------- quality_percentile_by_source
 def test_qpct_fair_per_source(spark):
     # source A scores {100,200,300}-ish, source B much lower — the TOP
