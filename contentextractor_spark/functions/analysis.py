@@ -776,7 +776,8 @@ def _pagerank_driver(
     of the (multi-)edge list — replayed exactly in int64 numpy (sums
     order-free by integerness; // == Spark div on non-negatives).
     `edges` must already be localCheckpointed.  Returns None above the
-    edge bound; seed_set (a Python set) switches to the PPR teleport."""
+    edge bound; seed_set (an array of seed ids) switches to the PPR
+    teleport."""
     from pyspark.sql.types import IntegralType, StringType
 
     src_t = edges.schema["src"].dataType
@@ -785,23 +786,10 @@ def _pagerank_driver(
     if seed_set is not None and not isinstance(src_t, IntegralType):
         # PPR seeds are compared as longs — only integral node graphs
         return None
-    if edges.limit(GRAPH_DRIVER_MAX_EDGES + 1).count() > GRAPH_DRIVER_MAX_EDGES:
-        return None
-    import numpy as np
-    import pandas as pd
-
-    ep = edges.select("src", "dst").toPandas()
-    if len(ep) == 0:
+    ep = _collect_within(edges.select("src", "dst"), GRAPH_DRIVER_MAX_EDGES)
+    if ep is None or len(ep) == 0:
         return None  # schema inference needs rows; slow path handles empty
-    both = pd.concat([ep["src"], ep["dst"]], ignore_index=True)
-    # factorize against the SORTED distinct domain (works for string
-    # word graphs — textrank — and integral id graphs alike; the row
-    # set is order-free so the sort is only an index convention)
-    nodes = np.sort(both.unique())
-    codes = pd.Series(both).map({v: i for i, v in enumerate(nodes)}).to_numpy(
-        dtype=np.int64
-    )
-    si, di = codes[: len(ep)], codes[len(ep):]
+    nodes, si, di = _factorize(ep["src"].to_numpy(), ep["dst"].to_numpy())
     outdeg = np.bincount(si, minlength=nodes.size).astype(np.int64)
     teleport = (100 - damping_pct) * 10_000
     n_nodes = nodes.size
@@ -809,11 +797,7 @@ def _pagerank_driver(
         p = np.full(n_nodes, 1_000_000, dtype=np.int64)
         tele_vec = np.full(n_nodes, teleport, dtype=np.int64)
     else:
-        sflag = np.fromiter(
-            (1 if int(v) in seed_set else 0 for v in nodes),
-            dtype=np.int64,
-            count=n_nodes,
-        )
+        sflag = np.isin(nodes, seed_set).astype(np.int64)
         p = sflag * 1_000_000
         tele_vec = sflag * teleport
     for _ in range(iters):
@@ -1568,33 +1552,29 @@ def _seed_bfs(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
     ).localCheckpoint()
-    n_seeds = dist.count()
-    n_edges = edges.count()
-    if (
-        n_edges <= GRAPH_DRIVER_MAX_EDGES
-        and n_edges * max(n_seeds, 1) <= GRAPH_DRIVER_MAX_WORK
-    ):
+    # the work bound n_edges * n_seeds <= GRAPH_DRIVER_MAX_WORK, as an
+    # edge bound (integer floor keeps it exact)
+    sp_ = _collect_within(dist.select("seed"), GRAPH_DRIVER_MAX_WORK)
+    ep = None if sp_ is None else _collect_within(
+        edges,
+        min(GRAPH_DRIVER_MAX_EDGES, GRAPH_DRIVER_MAX_WORK // max(len(sp_), 1)),
+    )
+    if ep is not None:
         # r6 driver fast path (the kcore pattern): landmark BFS is a
         # pure function of the directed edge list — first reach is
         # shortest, replayed per seed with vectorized level expansion.
-        import numpy as np
-        import pandas as pd
-
-        ep = edges.toPandas()
-        sp_ = dist.select("seed").toPandas()
-        src = ep["src"].to_numpy(dtype=np.int64)
-        dst = ep["dst"].to_numpy(dtype=np.int64)
         seed_vals = sp_["seed"].to_numpy(dtype=np.int64)
-        nodes = np.unique(np.concatenate([src, dst, seed_vals]))
-        lookup = {int(v): i for i, v in enumerate(nodes)}
-        si = np.fromiter((lookup[int(v)] for v in src), dtype=np.int64, count=len(src))
-        di = np.fromiter((lookup[int(v)] for v in dst), dtype=np.int64, count=len(dst))
+        nodes, si, di, sc = _factorize(
+            ep["src"].to_numpy(dtype=np.int64),
+            ep["dst"].to_numpy(dtype=np.int64),
+            seed_vals,
+        )
         out_s: list = []
         out_n: list = []
         out_d: list = []
-        for sv in seed_vals.tolist():
+        for sv, s0 in zip(seed_vals.tolist(), sc.tolist()):
             d = np.full(nodes.size, -1, dtype=np.int64)
-            d[lookup[int(sv)]] = 0
+            d[s0] = 0
             for r in range(1, max_depth + 1):
                 sel = d[si] == r - 1
                 if not sel.any():
@@ -1992,10 +1972,15 @@ def quality_by_dup(docs: DataFrame) -> DataFrame:
 
 GRAPH_DRIVER_MAX_EDGES = 1_000_000
 """Adaptive bound for the r6 graph-family driver fast paths (kcore,
-LPA, …): below it the checkpointed edge list is collected once and the
-identical integer round semantics run vectorized in numpy on the driver
-(the _lss_components pattern — ~16 MB at the bound, broadcast-sized);
-above it the distributed round loops run unchanged."""
+LPA, the _lss_components union-find, …): below it the checkpointed edge
+list is collected once and the identical integer round semantics run
+vectorized in numpy on the driver (component labels are a pure function
+of the edge set — no arithmetic convention to preserve; ~16 MB at the
+bound, the same order as a broadcast build); above it the distributed
+round loops run unchanged.  _collect_within is the only way a graph
+operator reaches the driver: edge lists and seed sets alike pass its
+cached limit-probe, seed sets under this bound unless their site has
+its own (GRAPH_DRIVER_MAX_WORK, random_walks' 100 000 seeds)."""
 
 GRAPH_DRIVER_MAX_WORK = 50_000_000
 """Second bound for the per-seed fast paths (_seed_bfs,
@@ -2031,8 +2016,8 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 9) -> DataFrame:
     if k < 1:
         raise ValueError("kcore: k must be >= 1")
     cur = _und_edges(edges).localCheckpoint()
-    n_edges = cur.count()
-    if n_edges <= GRAPH_DRIVER_MAX_EDGES:
+    pdf = _collect_within(cur.select("lo", "hi"), GRAPH_DRIVER_MAX_EDGES)
+    if pdf is not None:
         # r6 driver fast path (guide §8, the _lss_components pattern):
         # the peel is a pure integer function of the canonical edge
         # list; below the bound the checkpointed edges are collected
@@ -2041,10 +2026,6 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 9) -> DataFrame:
         # round-latency job chain (1 aggregate + 2 semi joins + 1
         # checkpoint + 1 count per round) disappears.  Identical
         # survivors/degrees; parity-tested against the loop below.
-        import numpy as np
-        import pandas as pd
-
-        pdf = cur.select("lo", "hi").toPandas()
         lo = pdf["lo"].to_numpy(dtype=np.int64)
         hi = pdf["hi"].to_numpy(dtype=np.int64)
         n_prev = len(lo)
@@ -2066,6 +2047,7 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 9) -> DataFrame:
         return edges.sparkSession.createDataFrame(
             out, schema="node bigint, core_deg bigint"
         )
+    n_edges = cur.count()
     for _ in range(rounds):
         keep = (
             cur.select(F.col("lo").alias("node"))
@@ -2191,37 +2173,23 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     bound, not a convergence promise (documented; the planted-
     community entry fixture converges in 3)."""
     und = _und_edges(edges).localCheckpoint()
-    if und.limit(GRAPH_DRIVER_MAX_EDGES + 1).count() <= GRAPH_DRIVER_MAX_EDGES:
+    pdf = _collect_within(und.select("lo", "hi"), GRAPH_DRIVER_MAX_EDGES)
+    if pdf is not None:
         # r6 driver fast path (the kcore pattern): synchronous LPA with
         # the packed (cnt DESC, label ASC) argmax is a pure integer
         # function of the edge list — replayed vectorized in numpy with
         # the IDENTICAL vote/tiebreak semantics (lexsort by (node, -cnt,
         # label), first row per node) and the same packing-bound refusal.
-        import numpy as np
-        import pandas as pd
-
-        pdf = und.select("lo", "hi").toPandas()
-        lo = pdf["lo"].to_numpy(dtype=np.int64)
-        hi = pdf["hi"].to_numpy(dtype=np.int64)
-        nodes = np.unique(np.concatenate([lo, hi]))
+        nodes, lc, hc = _factorize(
+            pdf["lo"].to_numpy(dtype=np.int64), pdf["hi"].to_numpy(dtype=np.int64)
+        )
         if nodes.size and (nodes[0] < 0 or nodes[-1] >= _LPA_SHIFT):
             raise ValueError(
                 "label_propagation: packing bounds violated at label "
                 f"{nodes[0] if nodes[0] < 0 else nodes[-1]}"
             )
-        idx = {int(v): i for i, v in enumerate(nodes)}
-        u = np.concatenate(
-            [
-                np.fromiter((idx[int(v)] for v in lo), dtype=np.int64, count=len(lo)),
-                np.fromiter((idx[int(v)] for v in hi), dtype=np.int64, count=len(hi)),
-            ]
-        )
-        v = np.concatenate(
-            [
-                np.fromiter((idx[int(x)] for x in hi), dtype=np.int64, count=len(hi)),
-                np.fromiter((idx[int(x)] for x in lo), dtype=np.int64, count=len(lo)),
-            ]
-        )
+        u = np.concatenate([lc, hc])
+        v = np.concatenate([hc, lc])
         lab = nodes.copy()
         for _ in range(rounds):
             vote_lab = lab[v]
@@ -6344,15 +6312,6 @@ def dedup_components_lss(
     return _lss_components(docs, edges, max_iter, "dedup_components_lss")
 
 
-LSS_DRIVER_MAX_EDGES = 1_000_000
-"""Adaptive bound for the r6 driver union-find fast path in
-_lss_components: below it the (checkpointed) edge list is collected and
-components are solved exactly on the driver (labels are a pure function
-of the edge set — no arithmetic convention to preserve); above it the
-distributed star loop runs unchanged.  1M edges ≈ 16 MB collected — the
-same order as a broadcast build."""
-
-
 def _lss_components(
     docs: DataFrame, edges: DataFrame, max_iter: int, opname: str
 ) -> DataFrame:
@@ -6364,15 +6323,14 @@ def _lss_components(
     labels depend ONLY on the edge list, which every caller has already
     localCheckpointed (it is materialized and small relative to the
     corpus: near-dup edges, not documents).  When it provably fits
-    LSS_DRIVER_MAX_EDGES (limit-probe, the _refuse_above convention) it
+    GRAPH_DRIVER_MAX_EDGES (_collect_within, the cached limit-probe) it
     is collected once and solved with exact min-root union-find —
     identical labels by definition (component = min reachable id is the
     unique transitive closure, engine-independent), zero per-round jobs.
     The star loop — the 10^12-edge design — runs verbatim above the
     bound."""
-    n_probe = edges.limit(LSS_DRIVER_MAX_EDGES + 1).count()
-    if n_probe <= LSS_DRIVER_MAX_EDGES:
-        pdf = edges.select("hi", "lo").toPandas()
+    pdf = _collect_within(edges.select("hi", "lo"), GRAPH_DRIVER_MAX_EDGES)
+    if pdf is not None:
         parent: dict = {}
 
         def _find(x: int) -> int:
@@ -6393,8 +6351,6 @@ def _lss_components(
                 else:
                     parent[ra] = rb
         nodes = set(pdf["hi"].tolist()) | set(pdf["lo"].tolist())
-        import pandas as pd
-
         lab = pd.DataFrame(
             {
                 "doc_id": [int(v) for v in sorted(nodes)],
@@ -6979,24 +6935,21 @@ def _refuse_above(df: DataFrame, bound: int, name: str, hint: str) -> None:
     than any cached proof still re-probes).  Still one (small) eager job
     on first call; callers that want pure laziness pass force=True and
     own the bound themselves."""
-    proven = _SIZE_GUARD_OK.get(df)
-    if proven is not None and proven <= bound:
-        return
-    if df.limit(bound + 1).count() > bound:
+    if not _fits_within(df, bound):
         raise ValueError(
             f"{name} refused: corpus exceeds {bound} rows "
             f"(existence probe stopped at {bound + 1}). {hint} "
             "or pass force=True to override."
         )
-    _SIZE_GUARD_OK[df] = bound if proven is None else min(proven, bound)
 
 
 def _fits_within(df: DataFrame, bound: int) -> bool:
-    """Boolean twin of _refuse_above for ADAPTIVE plan choices (r6): the
-    same cached limit-probe, but instead of refusing it reports whether
-    df provably fits `bound` rows — the decision input for broadcast-
-    sized fast paths (pick the small-side plan the way the planner picks
-    a broadcast join, guide §3.1)."""
+    """The cached limit-probe itself, for ADAPTIVE plan choices (r6):
+    reports whether df provably fits `bound` rows — the decision input
+    for broadcast-sized fast paths (pick the small-side plan the way the
+    planner picks a broadcast join, guide §3.1).  _refuse_above raises
+    on it and _collect_within collects on it, so every proof lands in
+    the one cache."""
     proven = _SIZE_GUARD_OK.get(df)
     if proven is not None and proven <= bound:
         return True
@@ -7004,6 +6957,27 @@ def _fits_within(df: DataFrame, bound: int) -> bool:
         return False
     _SIZE_GUARD_OK[df] = bound if proven is None else min(proven, bound)
     return True
+
+
+def _collect_within(df: DataFrame, bound: int) -> pd.DataFrame | None:
+    """The one way a graph operator brings rows to the driver:
+    df.toPandas() when _fits_within proves df has at most `bound` rows
+    (one cached limit-probe, so a side input proven earlier is not
+    probed again), else None — the caller then runs its distributed
+    loop unchanged.  Edge lists and seed sets both come through here,
+    so no driver replay collects an unbounded input."""
+    return df.toPandas() if _fits_within(df, bound) else None
+
+
+def _factorize(*arrays: np.ndarray) -> tuple:
+    """(nodes, codes_1, …, codes_k): the SORTED distinct domain of the
+    concatenated arrays plus one int64 code array per input, codes
+    indexing nodes.  Works for integral id graphs and string word
+    graphs (textrank) alike; the row set is order-free, so the sort is
+    only an index convention shared by every driver replay."""
+    nodes, inv = np.unique(np.concatenate(arrays), return_inverse=True)
+    cuts = np.cumsum([len(a) for a in arrays])[:-1]
+    return (nodes, *np.split(inv.astype(np.int64, copy=False), cuts))
 
 
 def knn_bruteforce(
@@ -9335,25 +9309,21 @@ def bfs_levels(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
     ).localCheckpoint()
-    if edges.limit(GRAPH_DRIVER_MAX_EDGES + 1).count() <= GRAPH_DRIVER_MAX_EDGES:
+    ep = _collect_within(edges, GRAPH_DRIVER_MAX_EDGES)
+    sp_ = None if ep is None else _collect_within(
+        dist.select("node"), GRAPH_DRIVER_MAX_EDGES
+    )
+    if sp_ is not None:
         # r6 driver fast path (the _seed_bfs pattern, min-over-seeds
         # collapse): ONE distance array seeded with every seed at 0 —
         # first reach is shortest, identical (node, dist) rows.
-        import numpy as np
-        import pandas as pd
-
-        ep = edges.toPandas()
-        sp_ = dist.select("node").toPandas()
-        src = ep["src"].to_numpy(dtype=np.int64)
-        dst = ep["dst"].to_numpy(dtype=np.int64)
-        seedv = sp_["node"].to_numpy(dtype=np.int64)
-        nodes = np.unique(np.concatenate([src, dst, seedv]))
-        lookup = {int(v): i for i, v in enumerate(nodes)}
-        si = np.fromiter((lookup[int(v)] for v in src), dtype=np.int64, count=len(src))
-        di = np.fromiter((lookup[int(v)] for v in dst), dtype=np.int64, count=len(dst))
+        nodes, si, di, sc = _factorize(
+            ep["src"].to_numpy(dtype=np.int64),
+            ep["dst"].to_numpy(dtype=np.int64),
+            sp_["node"].to_numpy(dtype=np.int64),
+        )
         d = np.full(nodes.size, -1, dtype=np.int64)
-        for s_ in seedv:
-            d[lookup[int(s_)]] = 0
+        d[sc] = 0
         for r in range(1, max_depth + 1):
             sel = d[si] == r - 1
             if not sel.any():
@@ -9716,12 +9686,15 @@ def personalized_pagerank(
         raise ValueError("damping_pct must be in [1, 100]")
     edges = edges.localCheckpoint()
     sd = seeds.select(F.col("node").cast("long").alias("node")).distinct()
-    seed_set = {int(r["node"]) for r in sd.collect()}
-    fast = _pagerank_driver(
-        edges, iters, damping_pct, False, seed_set=seed_set
-    )
-    if fast is not None:
-        return fast
+    # a seed set over the bound skips the driver replay entirely
+    # (seed_set=None there would mean plain pagerank)
+    sp_ = _collect_within(sd, GRAPH_DRIVER_MAX_EDGES)
+    if sp_ is not None:
+        fast = _pagerank_driver(
+            edges, iters, damping_pct, False, seed_set=sp_["node"].to_numpy()
+        )
+        if fast is not None:
+            return fast
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -11561,27 +11534,23 @@ def _random_walks_driver(
     hash-guided argmin walk is a pure function of the distinct edge
     list — md5 is the same bytes everywhere, so the per-step
     min(hv·2³²+dst) choice is replayed exactly with hashlib.  Returns
-    None (caller runs the distributed loop) above the edge bound or if
-    the walk would evaluate more than hash_budget md5 candidates (a
+    None (caller runs the distributed loop) above the edge bound, above
+    100 000 seed rows, or if the walk would evaluate more than hash_budget md5 candidates (a
     hub-heavy worst case the distributed join absorbs better)."""
     import hashlib
 
-    probe = e.limit(GRAPH_DRIVER_MAX_EDGES + 1).count()
-    if probe > GRAPH_DRIVER_MAX_EDGES:
+    ep = _collect_within(e, GRAPH_DRIVER_MAX_EDGES)
+    if ep is None:
         return None
-    n_seed_probe = seeds.limit(100_001).count()
-    if n_seed_probe > 100_000:
+    sp_ = _collect_within(
+        seeds.select(F.col(seed_col).cast("long").alias("w")), 100_000
+    )
+    if sp_ is None:
         return None
-    ep = e.toPandas()
     adj: dict = {}
     for s_, d_ in zip(ep["src"].tolist(), ep["dst"].tolist()):
         adj.setdefault(int(s_), []).append(int(d_))
-    seed_rows = [
-        int(v)
-        for v in seeds.select(
-            F.col(seed_col).cast("long").alias("w")
-        ).toPandas()["w"].tolist()
-    ]
+    seed_rows = [int(v) for v in sp_["w"].tolist()]
     rows = [(w, 0, w) for w in seed_rows]
     evals = 0
     for w in sorted(set(seed_rows)):
@@ -11607,8 +11576,6 @@ def _random_walks_driver(
                     best = p
             cur = best % 2**32
             rows.append((w, s, cur))
-    import pandas as pd
-
     pdf = pd.DataFrame(rows, columns=["walk_id", "step", "node"])
     return e.sparkSession.createDataFrame(
         pdf, schema="walk_id bigint, step int, node bigint"
@@ -15089,35 +15056,29 @@ def betweenness_approx(
         F.lit(0).cast("long").alias("dist"),
         F.lit(1).cast("long").alias("sigma"),
     ).localCheckpoint()
-    n_seed_rows = state.count()
-    n_edge_rows = edges.count()
-    if (
-        n_edge_rows <= GRAPH_DRIVER_MAX_EDGES
-        and n_edge_rows * max(n_seed_rows, 1) <= GRAPH_DRIVER_MAX_WORK
-    ):
+    # the work bound edges * seeds <= GRAPH_DRIVER_MAX_WORK, as an edge
+    # bound (integer floor keeps it exact)
+    sp_ = _collect_within(state.select("seed"), GRAPH_DRIVER_MAX_WORK)
+    ep = None if sp_ is None else _collect_within(
+        edges,
+        min(GRAPH_DRIVER_MAX_EDGES, GRAPH_DRIVER_MAX_WORK // max(len(sp_), 1)),
+    )
+    if ep is not None:
         # r6 driver fast path (the _seed_bfs pattern): Brandes forward σ
         # accumulation and the backward per-term truncated-div δ sums
         # are pure integer functions of the (multi-)edge list — replayed
         # per seed with exact int64 np.add.at accumulation, the SAME
         # per-candidate σ guard and per-node δ guard, multi-edges kept.
-        import numpy as np
-        import pandas as pd
-
-        ep = edges.toPandas()
-        sp_ = state.select("seed").toPandas()
-        src = ep["src"].to_numpy(dtype=np.int64)
-        dst = ep["dst"].to_numpy(dtype=np.int64)
-        seed_vals = sp_["seed"].to_numpy(dtype=np.int64)
-        nodes = np.unique(np.concatenate([src, dst, seed_vals]))
-        lookup = {int(v): i for i, v in enumerate(nodes)}
-        si = np.fromiter((lookup[int(v)] for v in src), dtype=np.int64, count=len(src))
-        di = np.fromiter((lookup[int(v)] for v in dst), dtype=np.int64, count=len(dst))
+        nodes, si, di, sc = _factorize(
+            ep["src"].to_numpy(dtype=np.int64),
+            ep["dst"].to_numpy(dtype=np.int64),
+            sp_["seed"].to_numpy(dtype=np.int64),
+        )
         bc = np.zeros(nodes.size, dtype=np.int64)
         nsd = np.zeros(nodes.size, dtype=np.int64)
-        for sv in seed_vals.tolist():
+        for s0 in sc.tolist():
             d = np.full(nodes.size, -1, dtype=np.int64)
             sig = np.zeros(nodes.size, dtype=np.int64)
-            s0 = lookup[int(sv)]
             d[s0] = 0
             sig[s0] = 1
             for r in range(1, max_depth + 1):
@@ -15342,26 +15303,22 @@ def katz_centrality(
         .select("node", F.lit(1).cast("long").alias("w"))
         .localCheckpoint()
     )
-    if edges.limit(GRAPH_DRIVER_MAX_EDGES + 1).count() <= GRAPH_DRIVER_MAX_EDGES:
+    ep = _collect_within(edges, GRAPH_DRIVER_MAX_EDGES)
+    sp_ = None if ep is None else _collect_within(
+        w.select("node"), GRAPH_DRIVER_MAX_EDGES
+    )
+    if sp_ is not None:
         # r6 driver fast path (the pagerank pattern): the attenuated
         # walk-count recursion is a linear integer pass over the edge
         # list — replayed exactly in int64 numpy with the same per-node
         # walk bound and per-level truncated attenuation.
-        import numpy as np
-        import pandas as pd
-
-        ep = edges.toPandas()
-        sp_ = w.select("node").toPandas()
-        src = ep["src"].to_numpy(dtype=np.int64)
-        dst = ep["dst"].to_numpy(dtype=np.int64)
-        seedv = sp_["node"].to_numpy(dtype=np.int64)
-        nodes = np.unique(np.concatenate([src, dst, seedv]))
-        lookup = {int(v): i for i, v in enumerate(nodes)}
-        si = np.fromiter((lookup[int(v)] for v in src), dtype=np.int64, count=len(src))
-        di = np.fromiter((lookup[int(v)] for v in dst), dtype=np.int64, count=len(dst))
+        nodes, si, di, sc = _factorize(
+            ep["src"].to_numpy(dtype=np.int64),
+            ep["dst"].to_numpy(dtype=np.int64),
+            sp_["node"].to_numpy(dtype=np.int64),
+        )
         wv = np.zeros(nodes.size, dtype=np.int64)
-        for s_ in seedv:
-            wv[lookup[int(s_)]] = 1
+        wv[sc] = 1
         katz = np.zeros(nodes.size, dtype=np.int64)
         nwalks = np.zeros(nodes.size, dtype=np.int64)
         ever = np.zeros(nodes.size, dtype=bool)

@@ -204,7 +204,7 @@ def test_quantized_knn_matches_python_fold(spark):
 def test_lss_driver_unionfind_matches_star_loop(spark, monkeypatch):
     """The r6 driver union-find fast path in _lss_components must produce
     the IDENTICAL label set as the distributed star loop (forced by
-    shrinking LSS_DRIVER_MAX_EDGES to 0) — chain (diameter >> rounds),
+    shrinking GRAPH_DRIVER_MAX_EDGES to 0) — chain (diameter >> rounds),
     forest and isolated-node cases in one fixture."""
     docs = spark.createDataFrame(
         [(i,) for i in range(40)], ["doc_id"]
@@ -221,7 +221,7 @@ def test_lss_driver_unionfind_matches_star_loop(spark, monkeypatch):
         (r["doc_id"], r["component"])
         for r in A._lss_components(docs, edges, 25, "t").collect()
     }
-    monkeypatch.setattr(A, "LSS_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(A, "GRAPH_DRIVER_MAX_EDGES", 0)
     slow = {
         (r["doc_id"], r["component"])
         for r in A._lss_components(docs, edges, 25, "t").collect()
