@@ -16,8 +16,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import os as _os
-
 from .functions.fused import fused_parse
 from .functions.javacompat import (
     JAVA_TRIM_CHARS,
@@ -36,9 +34,6 @@ from .operators.dom import elements_attr, parse_xml
 from .operators.tagfilter import tag_filtering_dom
 
 EXTRACTOR_VERSION = "cx-spark-0.1.0"
-
-# CX_NO_FUSED=1 disables the DOM→lines fast path (A/B + debugging escape)
-USE_FUSED = _os.environ.get("CX_NO_FUSED", "") != "1"
 
 
 @dataclass
@@ -113,10 +108,9 @@ def extract_from_html(html: str, raw: bytes | None = None) -> DocumentExtract:
     # Fast path: DOM→lines fusion (functions/fused.py) — byte-identical to
     # F9 serialize + T1-T8 re-lex by construction + differential tests; the
     # fused walk bails (None) on documents whose attr values contain < or >
-    # where the reference regexes have match-leak behavior.
-    res = None
-    if USE_FUSED:
-        res = fused_parse(filtered)
+    # where the reference regexes have match-leak behavior, and only those
+    # take the serializer fallback.
+    res = fused_parse(filtered)
     if res is None:
         res = textextract_parse(filtered.outer_html())
     main_text = java_trim(res.text)  # T15, forTest path (:188)

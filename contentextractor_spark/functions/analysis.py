@@ -27,8 +27,23 @@ import weakref
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+
+def _pin(df: DataFrame, cache_handle: list | None = None) -> DataFrame:
+    """Persist `df` (MEMORY_AND_DISK) — the one storage level for an
+    intermediate that several branches of one plan re-read — and append
+    it to `cache_handle` when one is given.  A lazily built result cannot
+    know when it is materialized, so the persisted frame stays pinned
+    until GC/ContextCleaner; callers that DO materialize the result
+    (dedup_components, bench loops) pass a list and .unpersist() its
+    entries afterwards (ADVICE r2)."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if cache_handle is not None:
+        cache_handle.append(df)
+    return df
 
 # ---------------------------------------------------------------------------
 # text analysis
@@ -1151,7 +1166,6 @@ def co_citation_pairs(
     edges: DataFrame,
     max_out: int = 64,
     min_count: int = 1,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Co-citation related-page discovery (Small 1973, the HITS-era
     similarity): pages (a, b) are related when many sources link to
@@ -1169,16 +1183,14 @@ def co_citation_pairs(
     Scale: distinct + one outdeg groupBy; the keep set joins back as a
     semi-join on src; the pair self-join keys on src (bounded fan-out
     by the cap); final groupBy on the pair key is map-side combinable.
-    checkpoint=True (default) localCheckpoints the distinct'd edge
-    table — it feeds the degree aggregate, the semi-join probe AND both
-    self-join legs, and without the checkpoint the whole upstream edge
-    subtree re-executes 4x (measured in the fixture plan: 4 copies of
-    the edge builder; the simhash checkpoint_bands lesson)."""
+    The distinct'd edge table is always localCheckpointed — it feeds the
+    degree aggregate, the semi-join probe AND both self-join legs, and
+    without the checkpoint the whole upstream edge subtree re-executes
+    4x (measured in the fixture plan: 4 copies of the edge builder; the
+    simhash_neardup_pairs band-checkpoint lesson)."""
     if max_out < 2:
         raise ValueError("max_out must be >= 2 (pairs need two dsts)")
-    e = edges.select("src", "dst").distinct()
-    if checkpoint:
-        e = e.localCheckpoint()
+    e = edges.select("src", "dst").distinct().localCheckpoint()
     keep = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).filter(
         F.col("outdeg") <= max_out
     )
@@ -1753,7 +1765,6 @@ def tfidf_cosine_pairs(
     docs: DataFrame,
     max_df: int = 100,
     threshold_milli: int = 300,
-    persist_weights: bool = True,
     cache_handle: list | None = None,
 ) -> DataFrame:
     """Sparse TF-IDF cosine near-dup pairs via inverted-index self-join
@@ -1779,8 +1790,8 @@ def tfidf_cosine_pairs(
     (stop-terms — the jaccard stop-shingle rule; tfidf_stop_terms is
     the loud companion listing them), bounding the self-join fanout at
     df^2 <= max_df^2 per term; the weight table feeds three consumers
-    (norms + both join sides) so it persists by default with the
-    jaccard cache_handle release contract."""
+    (norms + both join sides) so it is always persisted (_pin, with the
+    jaccard cache_handle release contract)."""
     tf, dfreq = _tf_df(docs)
     n = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
     idf = (
@@ -1799,12 +1810,7 @@ def tfidf_cosine_pairs(
     w = tf.join(idf, "term").select(
         "doc_id", "term", (F.col("tf") * F.col("idf_milli")).alias("w")
     )
-    if persist_weights:
-        from pyspark import StorageLevel
-
-        w = w.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_handle is not None:
-            cache_handle.append(w)
+    w = _pin(w, cache_handle)
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).cast("long").alias("sq")
     )
@@ -3420,7 +3426,6 @@ def minhash_jaccard_est(
     k: int = 4,
     n: int = 3,
     max_bucket_size: int | None = 100,
-    checkpoint_sig: bool = True,
 ) -> DataFrame:
     """Signature-based Jaccard ESTIMATE for LSH candidate pairs: for every
     within-bucket pair (doc_a < doc_b) of the banded MinHash index, the
@@ -3438,17 +3443,15 @@ def minhash_jaccard_est(
     max_bucket_size (the standard loud-overflow cap — pair volume stays
     O(Σ cap·bucket) instead of quadratic); signatures are k fixed columns
     so the per-pair compare is a column expression, never an array or a
-    per-element lambda.  checkpoint_sig=True localCheckpoints the
-    signature aggregate because FIVE consumers reference it (membership →
+    per-element lambda.  The signature aggregate is always
+    localCheckpointed because FIVE consumers reference it (membership →
     sizes, both self-join sides, and the two signature joins) — the
     simhash_neardup_pairs lesson: without it the corpus-wide aggregation
     re-executes per consumer (ReusedExchange does not fire across these
     shapes)."""
     if k % 2:
         raise ValueError("k must be even (band size 2)")
-    sig = minhash_signatures(docs, k=k, n=n)
-    if checkpoint_sig:
-        sig = sig.localCheckpoint()
+    sig = minhash_signatures(docs, k=k, n=n).localCheckpoint()
     mem = _band_membership(docs, k, n, sig=sig)
     ok = (
         mem.groupBy("band", "bucket")
@@ -3611,7 +3614,7 @@ def lsh_eval(
     crossJoins — no collect."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import StorageLevel, inheritable_thread_target
+    from pyspark import inheritable_thread_target
 
     # r6 (guide §2.6 overlap independent jobs): the candidate chain
     # (band membership → buckets → self-join) and the truth chain
@@ -3619,9 +3622,7 @@ def lsh_eval(
     # builds — running them from two driver threads lets one chain's
     # tasks back-fill the other's stragglers.  Results identical.
     def _build_cand():
-        mem = _band_membership(docs, k, n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        mem = _pin(_band_membership(docs, k, n))
         ok = minhash_lsh_buckets(
             docs, k=k, n=n, max_bucket_size=max_bucket_size, membership=mem
         ).select("band", "bucket")
@@ -3673,7 +3674,6 @@ def jaccard_pairs(
     n: int = 3,
     min_intersection: int = 2,
     max_shingle_freq: int = 100,
-    persist_shingles: bool = True,
     cache_handle: list | None = None,
 ) -> DataFrame:
     """n-gram Jaccard near-dup pairs via shingle self-join.
@@ -3683,12 +3683,11 @@ def jaccard_pairs(
     `max_shingle_freq` docs are dropped (stop-shingles) so the self-join
     can't quadratically blow up on a common phrase at 100 TB.
 
-    persist_shingles: the shingle set feeds three branches (freq, candidate
-    join, sizes).  Measured with FULL evaluation (noop sink — the earlier
-    count()-based numbers that favored recomputation were hollow), the
-    MEMORY_AND_DISK cache wins already at sf0.1 (5.2-6.1s vs 5.8-8.3s) and
-    wins harder at scale, so the default is now ON; pass False to trade
-    memory for recomputation on small inputs.
+    The shingle set feeds three branches (freq, candidate join, sizes), so
+    it is always persisted.  Measured with FULL evaluation (noop sink — the
+    earlier count()-based numbers that favored recomputation were hollow),
+    the MEMORY_AND_DISK cache wins already at sf0.1 (5.2-6.1s vs 5.8-8.3s)
+    and wins harder at scale.
 
     cache_handle (ADVICE r2): the persisted shingle DataFrame stays pinned
     until GC/ContextCleaner because this function cannot know when the lazy
@@ -3697,8 +3696,7 @@ def jaccard_pairs(
     can .unpersist() it afterwards.
     """
     return _pair_intersections(
-        docs, n, min_intersection, max_shingle_freq, persist_shingles,
-        cache_handle,
+        docs, n, min_intersection, max_shingle_freq, cache_handle
     ).select(
         "doc_a",
         "doc_b",
@@ -3712,20 +3710,13 @@ def _pair_intersections(
     n: int,
     min_intersection: int,
     max_shingle_freq: int,
-    persist_shingles: bool,
     cache_handle: list | None,
 ) -> DataFrame:
     """(doc_a, doc_b, intersection, sz_a, sz_b) — the shared shingle
     self-join core of jaccard_pairs and containment_pairs (integer-only;
     sizes over the same stop-filtered universe as the intersection —
     the r3 deflation fix)."""
-    sh = shingles(docs, n=n)
-    if persist_shingles:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_handle is not None:
-            cache_handle.append(sh)
+    sh = _pin(shingles(docs, n=n), cache_handle)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     rare = sh.join(
         freq.filter(F.col("df") <= max_shingle_freq).select("shingle"), "shingle"
@@ -3759,7 +3750,6 @@ def containment_pairs(
     threshold: tuple[int, int] = (7, 10),
     min_intersection: int = 2,
     max_shingle_freq: int = 100,
-    persist_shingles: bool = True,
     cache_handle: list | None = None,
 ) -> DataFrame:
     """Broder CONTAINMENT near-dup pairs: max(|A∩B|/|A|, |A∩B|/|B|) =
@@ -3782,8 +3772,7 @@ def containment_pairs(
     size lower-bound to prune with), hence the frequency-capped join."""
     num, den = threshold
     pairs = _pair_intersections(
-        docs, n, min_intersection, max_shingle_freq, persist_shingles,
-        cache_handle,
+        docs, n, min_intersection, max_shingle_freq, cache_handle
     )
     return pairs.filter(
         F.lit(int(den)) * F.col("intersection")
@@ -4208,7 +4197,6 @@ def jaccard_prefix_pairs(
     docs: DataFrame,
     threshold: tuple[int, int] = (3, 5),
     max_prefix_df: int | None = None,
-    persist_tokens: bool = True,
     cache_handle: list | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, intersection, union_sz): EVERY pair of docs whose
@@ -4232,9 +4220,9 @@ def jaccard_prefix_pairs(
     with df above the cap from BOTH sides (the minhash loud-cap
     convention — pairs whose only shared prefix token was dropped are
     lost; jaccard_prefix_overflow discloses exactly which tokens and how
-    many docs are affected).  persist_tokens pins the per-doc sorted
-    (df, tok) array table — it feeds the prefix explode and both verify
-    branches (the jaccard_pairs persist rule)."""
+    many docs are affected).  The per-doc sorted (df, tok) array table is
+    always pinned — it feeds the prefix explode and both verify branches
+    (the jaccard_pairs persist rule)."""
     num, den = threshold
     if not (0 < num <= den):
         raise ValueError(f"threshold must be a rational in (0,1]: {threshold}")
@@ -4268,12 +4256,7 @@ def jaccard_prefix_pairs(
             "doc_id", "__sa", "__arr", F.size("__sa").cast("long").alias("sz")
         )
     )
-    if persist_tokens:
-        from pyspark import StorageLevel
-
-        docarr = docarr.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_handle is not None:
-            cache_handle.append(docarr)
+    docarr = _pin(docarr, cache_handle)
     # prefix length p = sz − ceil(num·sz/den) + 1, all-integer ceil
     # integer ceil via div (Spark div ≡ DuckDB // on positives)
     p = F.expr(f"sz - (({num} * sz + {den} - 1) div {den}) + 1")
@@ -4418,7 +4401,6 @@ def editdist_pairs(
     max_prefix_df: int | None = None,
     text_col: str = "text",
     max_short: int = 10_000,
-    persist_grams: bool = True,
     cache_handle: list | None = None,
     *,
     force: bool = False,
@@ -4481,14 +4463,11 @@ def editdist_pairs(
             "doc_id", "__sa", "__arr", F.size("__sa").cast("long").alias("glen")
         )
     )
-    if persist_grams:
-        # the per-doc array table feeds the prefix, the verify arrays
-        # and the short-side probe (the jaccard_prefix persist rule)
-        from pyspark import StorageLevel
-
-        docarr = docarr.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_handle is not None:
-            cache_handle.append(docarr)
+    # the per-doc array table feeds the prefix, the verify arrays and the
+    # short-side probe (the jaccard_prefix persist rule), so it is always
+    # pinned: warm-session alternating A/B at sf0.1 measured 4.5/6.4/12.6 s
+    # pinned vs 8.0/17.9/35.9 s recomputed
+    docarr = _pin(docarr, cache_handle)
     lens = docs.select("doc_id", F.length(text_col).alias("len"))
     L = q * max_d + 1
     pref = (
@@ -4853,9 +4832,7 @@ def boilerplate_lines(docs: DataFrame, min_docs: int = 10) -> DataFrame:
     )
 
 
-def scrub_boilerplate_lines(
-    docs: DataFrame, min_docs: int = 10, persist_lines: bool = False
-) -> DataFrame:
+def scrub_boilerplate_lines(docs: DataFrame, min_docs: int = 10) -> DataFrame:
     """(doc_id, text_clean, n_kept, n_removed): every document rebuilt
     without the corpus-boilerplate lines (boilerplate_lines above), line
     order preserved; documents whose every line was boilerplate survive
@@ -4865,14 +4842,14 @@ def scrub_boilerplate_lines(
     Scale: the exploded non-empty line stream feeds THREE consumers (the
     boilerplate frequency agg, the anti-join probe side, and the per-doc
     line totals) and re-executes for each (ReusedExchange=0 measured).
-    persist_lines=True pins it once (MEMORY_AND_DISK, the jaccard
-    persist_shingles knob): measured alternating A/B at sf0.1 local[32]
-    is a TIE (persist 2.34/1.48/1.17 s vs 1.68/1.38/1.21) because the
-    upstream here is a cheap parquet scan — flip it on when the upstream
-    is an expensive pipeline (extraction output), the same ≥100x-scale
-    rule the jaccard retraction established; default off so the plan
-    builder pins nothing.  The boilerplate side is the line set with
-    df >= min_docs — tiny relative to the corpus (bounded by the
+    It is never pinned here: pinning it (MEMORY_AND_DISK, the jaccard
+    shingle rule) measured an alternating A/B TIE at sf0.1 local[32]
+    (persist 2.34/1.48/1.17 s vs 1.68/1.38/1.21) because the upstream
+    is a cheap parquet scan, so the plan builder pins nothing.  A caller
+    whose upstream is expensive (extraction output) should persist
+    `docs` itself before calling — the same ≥100x-scale rule the
+    jaccard retraction established.  The boilerplate side is the line
+    set with df >= min_docs — tiny relative to the corpus (bounded by the
     distinct-common-line count, not the doc count) — and the anti-join
     is left to AQE (the broadcast-hints-only-on-dimensions policy:
     usually broadcast-sized but DERIVED from the big table, so let the
@@ -4886,10 +4863,6 @@ def scrub_boilerplate_lines(
         .select("doc_id", "pos", F.trim("raw").alias("line"))
         .filter(F.col("line") != "")
     )
-    if persist_lines:
-        from pyspark import StorageLevel
-
-        lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
     bp = (
         lines.select("doc_id", "line")
         .distinct()
@@ -6428,15 +6401,11 @@ def dedup_components_minhash(
     Output contract matches dedup_components ((doc_id, component = min id
     in the component)); the DuckDB oracle rebuilds the bands and runs the
     recursive transitive closure over the same star edges."""
-    from pyspark import StorageLevel
-
     # membership feeds BOTH the hub aggregation and the edge join —
     # persist it so the shingle→signature aggregation runs once, not
     # twice; the eager localCheckpoint on edges below materializes it,
     # after which it is released
-    membership = _band_membership(docs, k, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    membership = _pin(_band_membership(docs, k, n))
     # hub selection IS minhash_lsh_buckets over the shared membership —
     # one definition of bucket/cap semantics, never a drifting copy
     hubs = minhash_lsh_buckets(
@@ -6667,22 +6636,21 @@ def simhash_neardup_pairs(
     max_hamming: int | None = None,
     max_bucket_size: int | None = None,
     sims: DataFrame | None = None,
-    checkpoint_bands: bool = True,
 ) -> DataFrame:
     """SimHash near-dup PAIRS: banded hamming-ball candidate generation +
     exact xor/bit_count re-score — the third dedup family's pair producer
     (exact hash, MinHash banding, and now SimHash; Manku et al. WWW'07
     banding scheme re-expressed as a bucket self-join).
 
-    checkpoint_bands (r5, measured): without it the band table — and the
-    corpus-sized fingerprint AGGREGATE under it — re-executes for the
-    bucket-size count AND both sides of the self-join (ReusedExchange=0 in
-    the physical plan: the three subtrees canonicalize differently).  One
-    localCheckpoint of the capped bands (docs × n_bands one-long rows)
-    collapses that to a single fingerprint pass: warm-session A/B at
-    sf0.1 local[32] = 2.9-3.9 s vs 3.4-6.9 s.  At 100 TB the avoided
-    re-aggregations are corpus-sized, so this is the default; pass False
-    to keep the builder fully lazy.
+    The capped band table is always localCheckpointed (r5, measured):
+    without it the band table — and the corpus-sized fingerprint
+    AGGREGATE under it — re-executes for the bucket-size count AND both
+    sides of the self-join (ReusedExchange=0 in the physical plan: the
+    three subtrees canonicalize differently).  One localCheckpoint of the
+    capped bands (docs × n_bands one-long rows) collapses that to a
+    single fingerprint pass: warm-session A/B at sf0.1 local[32] =
+    2.9-3.9 s vs 3.4-6.9 s without it, and at 100 TB the avoided
+    re-aggregations are corpus-sized.
 
     Pigeonhole guarantee: two fingerprints at hamming distance <= n_bands-1
     agree EXACTLY on at least one of the n_bands disjoint band slices, so
@@ -6726,8 +6694,7 @@ def simhash_neardup_pairs(
             .filter(F.col("__n_in_bucket") <= max_bucket_size)
             .drop("__n_in_bucket")
         )
-    if checkpoint_bands:
-        bands = bands.localCheckpoint()
+    bands = bands.localCheckpoint()
     a = bands.alias("a")
     b = bands.alias("b")
     pairs = (
@@ -9685,7 +9652,13 @@ def personalized_pagerank(
     if not 1 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [1, 100]")
     edges = edges.localCheckpoint()
-    sd = seeds.select(F.col("node").cast("long").alias("node")).distinct()
+    # materialize the seed set ONCE (the bfs_levels seed table): the
+    # probe, the collect and the distributed base join all read it
+    sd = (
+        seeds.select(F.col("node").cast("long").alias("node"))
+        .distinct()
+        .localCheckpoint()
+    )
     # a seed set over the bound skips the driver replay entirely
     # (seed_set=None there would mean plain pagerank)
     sp_ = _collect_within(sd, GRAPH_DRIVER_MAX_EDGES)
@@ -14706,7 +14679,6 @@ def centroid_summary(
     docs: DataFrame,
     pos_bits: int = 20,
     score_bound: int = 2**42,
-    persist_sents: bool = True,
     cache_handle: list | None = None,
 ) -> DataFrame:
     """(doc_id, sent_pos, sentence, score_milli, n_sents): one-sentence
@@ -14734,16 +14706,10 @@ def centroid_summary(
     equi-join.  idf table is term-level (vocabulary-sized) — AQE
     broadcasts it when small.  No window over the corpus, no global
     sort.  The sentence table feeds THREE consumers (token stream,
-    n_sents, winner join-back), so it persists by default with the
-    tfidf cache_handle release contract — without it the regex split +
-    explode re-executes per consumer."""
-    sents = sentence_split(docs)
-    if persist_sents:
-        from pyspark import StorageLevel
-
-        sents = sents.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_handle is not None:
-            cache_handle.append(sents)
+    n_sents, winner join-back), so it is always persisted (_pin, with
+    the tfidf cache_handle release contract) — without it the regex
+    split + explode re-executes per consumer."""
+    sents = _pin(sentence_split(docs), cache_handle)
     stok = (
         sents.select(
             "doc_id",
@@ -15379,8 +15345,6 @@ def mutual_nn_pairs(
     emb: DataFrame,
     *,
     force: bool = False,
-    persist_pairs: bool = True,
-    cache_handle: list | None = None,
 ) -> DataFrame:
     """(vec_id_a, vec_id_b, cos_milli): MUTUAL nearest-neighbor pairs —
     (a, b) kept iff b is a's top-1 cosine neighbor AND a is b's, the
@@ -15417,8 +15381,8 @@ def mutual_nn_pairs(
     ((cos_milli DESC, vb ASC) — argmax over ascending-id columns picks
     the first, i.e. lowest-id, maximum) leaves the task; only n top-1
     rows reach the mutual self-join.  Warm 24.1 s → ~1 s at sf0.1
-    (plans/r06/mutual_nn_pairs_*.txt).  persist_pairs/cache_handle are
-    kept for API compatibility; nothing needs persisting anymore."""
+    (plans/r06/mutual_nn_pairs_*.txt).  No reused subtree is left, so
+    nothing is pinned."""
     if not force:
         _refuse_above(
             emb,
@@ -15427,7 +15391,6 @@ def mutual_nn_pairs(
             "The all-pairs integer dot is O(n^2 d); bucket with "
             "embedding_lsh/ivf first at scale,",
         )
-    del persist_pairs, cache_handle  # r6: no reused subtree left to pin
     spark = emb.sparkSession
     q = quantize_embeddings(emb).select("vec_id", "qvec")
     # bounded collect: ≤ MAX_EXACT_PAIR_ROWS rows × ndim small ints —

@@ -35,21 +35,18 @@ JA archetype docs, identical output on all three):
 
 Round-4 growth measurement (same host protocol, 1500 archetype docs,
 best-of-3 after warm-up): full extraction 1.94 ms/doc at 6,235 entries vs
-1.66 with CX_LEXICON=mini — fold delta 0.28 ms/doc, flat vs the 2,367-entry
-r3 lexicon (0.29), confirming probe cost is entry-count-independent.
+1.66 with the round-2 ~60-entry mini lexicon — fold delta 0.28 ms/doc, flat
+vs the 2,367-entry r3 lexicon (0.29), confirming probe cost is
+entry-count-independent.  A smaller lexicon saves only that fixed delta
+and folds fewer words Kuromoji-style, so only the full lexicon ships.
 
 Documented divergence: vocabulary OUTSIDE the subset segments as whole
 script runs rather than IPADIC morphemes (and an OOV compound whose PREFIX
 is a lexicon entry splits after that entry).  The lexicon is data, not
 code — extending it further is a lexicon_data.py edit.
-
-CX_LEXICON=mini reverts to the round-2 ~60-entry mini lexicon (A/B
-escape hatch, same mechanism).
 """
 
 from __future__ import annotations
-
-import os
 
 from .lexicon_data import build_lexicon
 
@@ -64,78 +61,7 @@ from .tokenize import _PURE_DIGITS
 # surface → (part_of_speech, base_form or None).  POS strings follow
 # IPADIC's comma-joined convention (the reference does substring containment
 # checks on them, so prefixes suffice).
-MINI_LEXICON: dict[str, tuple[str, str | None]] = {
-    # --- particles (助詞) — dropped by the K2 filter --------------------
-    "は": ("助詞,係助詞", None),
-    "が": ("助詞,格助詞", None),
-    "を": ("助詞,格助詞", None),
-    "に": ("助詞,格助詞", None),
-    "で": ("助詞,格助詞", None),
-    "と": ("助詞,並立助詞", None),
-    "も": ("助詞,係助詞", None),
-    "の": ("助詞,連体化", None),
-    "へ": ("助詞,格助詞", None),
-    "や": ("助詞,並立助詞", None),
-    "から": ("助詞,格助詞", None),
-    "まで": ("助詞,副助詞", None),
-    # --- verbs / auxiliaries — dropped -----------------------------------
-    "する": ("動詞,自立", "する"),
-    "した": ("動詞,自立", "する"),
-    "します": ("動詞,自立", "する"),
-    "です": ("助動詞", "です"),
-    "ます": ("助動詞", "ます"),
-    "ある": ("動詞,自立", "ある"),
-    "いる": ("動詞,自立", "いる"),
-    # --- adjectives (形容詞) — kept, base-form folded ---------------------
-    "高い": ("形容詞,自立", "高い"),
-    "高く": ("形容詞,自立", "高い"),
-    "新しい": ("形容詞,自立", "新しい"),
-    "新しく": ("形容詞,自立", "新しい"),
-    "美しい": ("形容詞,自立", "美しい"),
-    "美しく": ("形容詞,自立", "美しい"),
-    "速い": ("形容詞,自立", "速い"),
-    "速く": ("形容詞,自立", "速い"),
-    # --- numerals (名詞-数) — dropped by the 数 exclusion ------------------
-    "一": ("名詞,数", None),
-    "二": ("名詞,数", None),
-    "三": ("名詞,数", None),
-    # --- nouns (名詞) — kept ----------------------------------------------
-    "日本語": ("名詞,一般", None),
-    "日本": ("名詞,固有名詞,地域,国", None),
-    "本文": ("名詞,一般", None),
-    "記事": ("名詞,一般", None),
-    "内容": ("名詞,一般", None),
-    "情報": ("名詞,一般", None),
-    "文化": ("名詞,一般", None),
-    "技術": ("名詞,一般", None),
-    "経済": ("名詞,一般", None),
-    "社会": ("名詞,一般", None),
-    "生活": ("名詞,一般", None),
-    "旅行": ("名詞,サ変接続", None),
-    "音楽": ("名詞,一般", None),
-    "歴史": ("名詞,一般", None),
-    "科学": ("名詞,一般", None),
-    "自然": ("名詞,形容動詞語幹", None),
-    "テキスト": ("名詞,一般", None),
-    "確認": ("名詞,サ変接続", None),
-    "トップページ": ("名詞,一般", None),
-    "ホーム": ("名詞,一般", None),
-    "案内": ("名詞,サ変接続", None),
-    "プライバシー": ("名詞,一般", None),
-    "トピックス": ("名詞,一般", None),
-    "問い合わせ": ("名詞,サ変接続", None),
-    "問い合せ": ("名詞,サ変接続", None),
-    "スマホ": ("名詞,一般", None),
-    "利用": ("名詞,サ変接続", None),
-    "規約": ("名詞,一般", None),
-    "一覧": ("名詞,一般", None),
-}
-
-LEXICON: dict[str, tuple[str, str | None]] = (
-    MINI_LEXICON
-    if os.environ.get("CX_LEXICON", "") == "mini"
-    else build_lexicon()
-)
+LEXICON: dict[str, tuple[str, str | None]] = build_lexicon()
 
 
 _ALL_FIRST = frozenset(k[0] for k in LEXICON)

@@ -19,7 +19,6 @@ deterministically: keep runs of length > 1 that are not pure digits.
 
 from __future__ import annotations
 
-import os
 import re
 
 import pandas as pd
@@ -50,15 +49,12 @@ def keyword_tokens(text: str) -> list[str]:
 
 
 def keyword_list_regex(text: str) -> str:
-    """Round-1 regex approximation of the K2 fold (kept for A/B): script-run
-    tokens, length > 1, non-numeric, trailing comma."""
+    """Round-1 regex approximation of the K2 fold: script-run tokens,
+    length > 1, non-numeric, trailing comma.  Kept as the pure-OOV fast
+    path of lexicon.keyword_fold_kuromoji, which returns it verbatim for
+    text with no lexicon first-char."""
     toks = keyword_tokens(text)
     return "".join(t + "," for t in toks)
-
-
-# CX_KEYWORD_REGEX=1 falls back to the round-1 regex fold (A/B escape hatch;
-# the lexicon analyzer costs ~0.35 ms/doc extra on JA-heavy pages)
-_USE_LEXICON = os.environ.get("CX_KEYWORD_REGEX", "") != "1"
 
 
 def keyword_list(text: str) -> str:
@@ -66,9 +62,9 @@ def keyword_list(text: str) -> str:
     (名詞 non-数 / 形容詞) + base-form fold + trailing comma, over the
     bundled-lexicon analyzer (lexicon.py).  OOV spans degrade to the
     script-run behavior of keyword_list_regex — identical output on pure
-    out-of-lexicon text, Kuromoji-shaped output on covered vocabulary."""
-    if not _USE_LEXICON:
-        return keyword_list_regex(text)
+    out-of-lexicon text, Kuromoji-shaped output on covered vocabulary
+    (the analyzer costs ~0.35 ms/doc over the regex fold on JA-heavy
+    pages)."""
     from .lexicon import keyword_fold_kuromoji
 
     return keyword_fold_kuromoji(text)
@@ -76,12 +72,8 @@ def keyword_list(text: str) -> str:
 
 def keyword_list_series(texts: pd.Series) -> pd.Series:
     """Batch form (Arrow-batch granularity).  The analyzer is per-document
-    Python like the DOM walk it accompanies.  Honors the same
-    CX_KEYWORD_REGEX=1 escape hatch as the scalar form (ADVICE r2: the two
-    folds must never diverge under the documented A/B flag) — the regex
-    path uses vectorized str.findall-equivalent mapping."""
-    if not _USE_LEXICON:
-        return texts.fillna("").map(keyword_list_regex)
+    Python like the DOM walk it accompanies; both forms call the same
+    fold, so they cannot diverge (ADVICE r2)."""
     from .lexicon import keyword_fold_kuromoji
 
     return texts.fillna("").map(keyword_fold_kuromoji)

@@ -118,7 +118,7 @@ def test_br_run_traps_collapse(monkeypatch):
 
     from contentextractor_spark.functions import textextract
 
-    monkeypatch.setattr(extractor, "USE_FUSED", False)
+    monkeypatch.setattr(extractor, "fused_parse", lambda body: None)
     never = re.compile("(?!x)x")
     monkeypatch.setattr(textextract, "_SUB_RULE_01", never)
     head, _, tail = TEXT.partition(" ")
@@ -130,7 +130,7 @@ def test_br_run_traps_collapse(monkeypatch):
 def test_entities_trap_unescape(monkeypatch):
     from contentextractor_spark.functions import textextract
 
-    monkeypatch.setattr(extractor, "USE_FUSED", False)
+    monkeypatch.setattr(extractor, "fused_parse", lambda body: None)
     monkeypatch.setattr(textextract, "unescape_html4", lambda s: s)
     got = extract_document(_page_entities(TEXT)).main_text
     assert got != (TEXT + entry_mod._ENT_TEXT).strip()
@@ -179,6 +179,6 @@ def test_block_selection_positive_and_trap(monkeypatch):
 
     monkeypatch.setattr(textextract, "cal_threshold", lambda maxima: 5)
     monkeypatch.setattr(fused, "cal_threshold", lambda maxima: 5, raising=False)
-    monkeypatch.setattr(extractor, "USE_FUSED", False)
+    monkeypatch.setattr(extractor, "fused_parse", lambda body: None)
     got = extract_document(_page_blocks(text, entry_mod._BLOCK_J1)).main_text
     assert got != text and "jjjj" in got

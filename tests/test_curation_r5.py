@@ -162,19 +162,6 @@ def test_gopher_rules_no_shuffle(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_scrub_persist_path_equal(spark, bp_docs):
-    """persist_lines=True must be a pure execution-strategy choice
-    (the jaccard persist_shingles contract): identical rows either way."""
-    base = {tuple(r) for r in A.scrub_boilerplate_lines(bp_docs, 4).collect()}
-    cached = {
-        tuple(r)
-        for r in A.scrub_boilerplate_lines(
-            bp_docs, 4, persist_lines=True
-        ).collect()
-    }
-    assert base == cached and len(base) == 6
-
-
 def test_component_canonical_argmax_and_tiebreak(spark):
     comps = spark.createDataFrame(
         [(0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)],

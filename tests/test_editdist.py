@@ -113,9 +113,16 @@ def test_short_side_refusal(spark):
 
 def test_short_string_refusal(spark):
     from py4j.protocol import Py4JJavaError
+    from pyspark.errors import SparkRuntimeException
 
+    # the refusal fires inside the max_short probe's shuffle stage; Spark
+    # surfaces it either as the job abort (Py4JJavaError) or, when AQE
+    # rethrows the failed stage's own error, as the converted
+    # SparkRuntimeException — both carry the raise_error message
     docs = _docs(spark, [(0, "abcdef"), (1, "ab")])
-    with pytest.raises(Py4JJavaError, match="shorter than q"):
+    with pytest.raises(
+        (Py4JJavaError, SparkRuntimeException), match="shorter than q"
+    ):
         A.editdist_pairs(docs, max_d=1, q=3).collect()
 
 

@@ -2,24 +2,12 @@
 名詞-not-数 / 形容詞 filter, surface-length > 1, BASE-FORM fold, trailing
 comma.  Out-of-lexicon text must degrade to the round-1 script-run fold."""
 
-import os
-
-import pytest
-
 from contentextractor_spark.functions.lexicon import analyze, keyword_fold_kuromoji
 from contentextractor_spark.functions.tokenize import (
     keyword_list,
     keyword_list_regex,
     keyword_list_series,
 )
-
-# goldens that pin FULL-lexicon (IPADIC-subset) behavior are meaningless
-# under the CX_LEXICON=mini A/B escape hatch — skip, don't fail
-full_lexicon_only = pytest.mark.skipif(
-    os.environ.get("CX_LEXICON") == "mini",
-    reason="pins full IPADIC-subset lexicon behavior; CX_LEXICON=mini active",
-)
-
 
 def test_particles_and_verbs_dropped():
     # 日本語のテキストを確認します: nouns kept, の/を particles and します
@@ -70,7 +58,6 @@ def test_series_matches_scalar():
     assert got[2] == "hello,world,"
 
 
-@full_lexicon_only
 def test_archetype_corpus_fold_regression():
     """Pin the fold over the deterministic archetype corpus so lexicon or
     analyzer changes are loud (keyword-level golden for A1-A10 pages)."""
@@ -172,7 +159,6 @@ def test_analyzer_surface_concatenation_property():
     check()
 
 
-@full_lexicon_only
 def test_conjugation_paradigm_segmentation():
     """r3 IPADIC-subset paradigms: inflected verbs/adjectives segment as
     stem(base-form) + auxiliary, exactly Kuromoji's rows."""
@@ -188,19 +174,16 @@ def test_conjugation_paradigm_segmentation():
     ]
 
 
-@full_lexicon_only
 def test_conjugated_adjective_folds_to_base():
     assert keyword_fold_kuromoji("新しかった技術") == "新しい,技術,"
 
 
-@full_lexicon_only
 def test_onbin_verb_dropped_nouns_kept():
     # 使っ (促音便 of 使う) recognized and dropped as a verb; the OOV
     # katakana compound and the サ変 noun are kept whole
     assert keyword_fold_kuromoji("データベースを使った検索") == "データベース,検索,"
 
 
-@full_lexicon_only
 def test_collision_policy_noun_wins():
     # 喜び is both a curated 名詞,一般 row and 喜ぶ's 連用形; よう is both a
     # curated 名詞,非自立 row and an auxiliary surface.  The curated noun
@@ -224,7 +207,6 @@ def test_collision_audit_is_loud(monkeypatch):
         lexicon_data.build_lexicon()
 
 
-@full_lexicon_only
 def test_reference_filter_on_real_sentence():
     # 本 is a single-char surface (dropped by len>1), 読ん/します are verbs
     # (dropped by POS), 勉強 is an OOV kanji run kept as a noun

@@ -429,7 +429,7 @@ def test_tfidf_pairs_identical_docs_near_1000(spark):
     out = {
         (r.doc_a, r.doc_b): r.cos_milli
         for r in A.tfidf_cosine_pairs(
-            docs, max_df=10, threshold_milli=300, persist_weights=False
+            docs, max_df=10, threshold_milli=300
         ).collect()
     }
     assert set(out) == {(1, 2)}
@@ -457,7 +457,6 @@ def test_tfidf_pairs_random_parity(spark):
                 docs,
                 max_df=max_df,
                 threshold_milli=thr,
-                persist_weights=False,
             ).collect()
         }
         assert out == _tfidf_ref(texts, max_df, thr), (max_df, thr)

@@ -344,16 +344,6 @@ def test_exact_pair_baselines_refuse_above_bound(spark, monkeypatch):
     assert A.knn_bruteforce(emb, n_queries=2, k=2, force=True).count() > 0
 
 
-def test_jaccard_persist_path_equal(spark, docs):
-    """persist_shingles=True (the >=100x-scale flip, VERDICT r1 #5) must be
-    a pure execution-strategy choice: identical pairs either way."""
-    from contentextractor_spark.functions.analysis import jaccard_pairs
-
-    base = {tuple(r) for r in jaccard_pairs(docs).collect()}
-    cached = {tuple(r) for r in jaccard_pairs(docs, persist_shingles=True).collect()}
-    assert base == cached and len(base) > 0
-
-
 def test_asof_plan_single_shuffle_and_semantics(spark):
     """asof_latest: one Exchange (the user_id sort-partition), no join
     operator in the plan; carry-forward semantics spot-checked."""
