@@ -2160,9 +2160,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def dedup_components(spark, sf_dir):
         return A.dedup_components(_docs(spark, sf_dir))
 
-    def dedup_components_lss(spark, sf_dir):
-        return A.dedup_components_lss(_docs(spark, sf_dir))
-
     def dedup_components_minhash(spark, sf_dir):
         # the full-scale dedup composition: MinHash banding → bucket star
         # edges (linear volume) → large-star/small-star components
@@ -4603,30 +4600,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.pmod(F.col("doc_id") + 2, F.col("__n")).alias("dst"),
         )
         seeds = spark.range(1).select(F.lit(0).cast("long").alias("node"))
-        # r6 (guide §2.6): the two graphs' BFS chains are independent and
-        # latency-bound — build them from two driver threads so one
-        # chain's round jobs back-fill the other's; results identical
-        # (inheritable_thread_target keeps the caller's job group and tags)
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            fa = ex.submit(
-                inheritable_thread_target(spark)(
-                    lambda: A.bipartite_check(odd, seeds, max_depth=8).select(
-                        F.lit("odd_deltas").alias("graph"), "*"
-                    )
-                )
-            )
-            fb = ex.submit(
-                inheritable_thread_target(spark)(
-                    lambda: A.bipartite_check(
-                        odd.unionByName(chord), seeds, max_depth=8
-                    ).select(F.lit("parity_chord").alias("graph"), "*")
-                )
-            )
-            return fa.result().unionByName(fb.result())
+        # overlap: the two graphs' BFS chains are independent and
+        # latency-bound
+        fa, fb = A.overlap(
+            spark,
+            lambda: A.bipartite_check(odd, seeds, max_depth=8).select(
+                F.lit("odd_deltas").alias("graph"), "*"
+            ),
+            lambda: A.bipartite_check(
+                odd.unionByName(chord), seeds, max_depth=8
+            ).select(F.lit("parity_chord").alias("graph"), "*"),
+        )
+        return fa.unionByName(fb)
 
     def embedding_drift(spark, sf_dir):
         # r5 session-14: mean-vector drift card over two splits — the
@@ -5251,7 +5236,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard_pairs": ngram_jaccard_pairs,
         "simhash": simhash,
         "dedup_components": dedup_components,
-        "dedup_components_lss": dedup_components_lss,
+        "dedup_components_lss": dedup_components,  # the same solver
         "knn_bruteforce": knn_bruteforce,
         "embedding_neardup": embedding_neardup,
         "embedding_lsh_buckets": embedding_lsh_buckets,
@@ -7565,7 +7550,7 @@ bands AS (
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
+    sql = {
         "cdc_chunks": f"""
             WITH {_cdc_cte(16)}
             SELECT doc_id, chunk_id, start_pos, end_pos, n_tokens, fp
@@ -14160,37 +14145,6 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN (SELECT src, min(dst) AS mn FROM reach GROUP BY src) m
               ON m.src = d.doc_id
         """,
-        "dedup_components_lss": """
-            WITH RECURSIVE
-            w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-            sh AS (
-              SELECT DISTINCT doc_id, shingle FROM (
-                SELECT doc_id,
-                       unnest(list_transform(generate_series(1, len(ws) - 2),
-                              i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
-                           AS shingle
-                FROM w WHERE len(ws) >= 3)),
-            freq AS (SELECT shingle FROM sh GROUP BY shingle
-                     HAVING count(*) <= 100),
-            rare AS (SELECT sh.doc_id, sh.shingle FROM sh
-                     JOIN freq USING (shingle)),
-            e AS (
-              SELECT a.doc_id AS a, b.doc_id AS b
-              FROM rare a JOIN rare b
-                ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2 HAVING count(*) >= 2),
-            sym AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
-            reach(src, dst) AS (
-              SELECT a, b FROM sym
-              UNION
-              SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a)
-            SELECT d.doc_id,
-                   CAST(LEAST(d.doc_id, COALESCE(m.mn, d.doc_id)) AS BIGINT)
-                       AS component
-            FROM documents d
-            LEFT JOIN (SELECT src, min(dst) AS mn FROM reach GROUP BY src) m
-              ON m.src = d.doc_id
-        """,
         "dedup_components_minhash": f"""
             WITH RECURSIVE {_minhash_comp_ctes()}
             SELECT doc_id, component FROM comp
@@ -15010,3 +14964,6 @@ def oracle_sql() -> dict[str, str]:
         # non-SQL-expressible (full DOM+density pipeline / KMeans) →
         # rows-only check.
     }
+    # the registry row dedup_components_lss runs dedup_components
+    sql["dedup_components_lss"] = sql["dedup_components"]
+    return sql

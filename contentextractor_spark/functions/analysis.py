@@ -24,10 +24,12 @@ from __future__ import annotations
 
 import math
 import weakref
+from collections.abc import Iterable
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -44,6 +46,20 @@ def _pin(df: DataFrame, cache_handle: list | None = None) -> DataFrame:
     if cache_handle is not None:
         cache_handle.append(df)
     return df
+
+
+def overlap(spark, *builders) -> tuple:
+    """Run independent zero-argument plan builders from one driver thread
+    each and return their results in order: latency-bound chains of
+    eager checkpoints let one chain's tasks back-fill the other's
+    stragglers.  Results are the same as running the builders one after
+    another.  Each thread is wrapped in inheritable_thread_target, so its
+    jobs keep the caller's job group and tags; an exception in a builder
+    re-raises here."""
+    with ThreadPoolExecutor(max_workers=len(builders)) as ex:
+        futures = [ex.submit(inheritable_thread_target(spark)(b)) for b in builders]
+        return tuple(f.result() for f in futures)
+
 
 # ---------------------------------------------------------------------------
 # text analysis
@@ -1543,6 +1559,25 @@ def table_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
+def _bfs_dist(
+    si: np.ndarray, di: np.ndarray, n_nodes: int, starts, max_depth: int
+) -> np.ndarray:
+    """Level-synchronous BFS over factorized directed edge codes
+    (si → di): d[v] = hops from the nearest of `starts` (0 there), -1
+    when unreached within max_depth.  First reach is shortest, so level
+    r expands only the nodes first reached at r-1."""
+    d = np.full(n_nodes, -1, dtype=np.int64)
+    d[starts] = 0
+    for r in range(1, max_depth + 1):
+        sel = d[si] == r - 1
+        if not sel.any():
+            break
+        reached = np.unique(di[sel])
+        new = reached[d[reached] == -1]
+        d[new] = r
+    return d
+
+
 def _seed_bfs(
     edges: DataFrame, seeds: DataFrame, max_depth: int
 ) -> DataFrame:
@@ -1585,15 +1620,7 @@ def _seed_bfs(
         out_n: list = []
         out_d: list = []
         for sv, s0 in zip(seed_vals.tolist(), sc.tolist()):
-            d = np.full(nodes.size, -1, dtype=np.int64)
-            d[s0] = 0
-            for r in range(1, max_depth + 1):
-                sel = d[si] == r - 1
-                if not sel.any():
-                    break
-                reached = np.unique(di[sel])
-                new = reached[d[reached] == -1]
-                d[new] = r
+            d = _bfs_dist(si, di, nodes.size, s0, max_depth)
             m = d >= 0
             out_s.append(np.full(int(m.sum()), sv, dtype=np.int64))
             out_n.append(nodes[m])
@@ -1935,13 +1962,9 @@ def dedup_components_tfidf(
         cache_handle=handle,
     )
     # doc_a < doc_b by the join condition; LSS wants (hi, lo)
-    edges = pairs.select(
-        F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo")
-    ).localCheckpoint()
-    for df in handle:  # eager checkpoint done — release the weight cache
-        df.unpersist()
+    edges = pairs.select(F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo"))
     return _lss_components(
-        docs.select("doc_id"), edges, max_iter, "dedup_components_tfidf"
+        docs, edges, max_iter, "dedup_components_tfidf", release=handle
     )
 
 
@@ -1978,15 +2001,16 @@ def quality_by_dup(docs: DataFrame) -> DataFrame:
 
 GRAPH_DRIVER_MAX_EDGES = 1_000_000
 """Adaptive bound for the r6 graph-family driver fast paths (kcore,
-LPA, the _lss_components union-find, …): below it the checkpointed edge
-list is collected once and the identical integer round semantics run
-vectorized in numpy on the driver (component labels are a pure function
-of the edge set — no arithmetic convention to preserve; ~16 MB at the
-bound, the same order as a broadcast build); above it the distributed
-round loops run unchanged.  _collect_within is the only way a graph
-operator reaches the driver: edge lists and seed sets alike pass its
-cached limit-probe, seed sets under this bound unless their site has
-its own (GRAPH_DRIVER_MAX_WORK, random_walks' 100 000 seeds)."""
+LPA, the _lss_components min-root replay, …): below it the edge list,
+checkpointed by the operator itself, is collected once and the identical
+integer round semantics run vectorized in numpy on the driver (component
+labels are a pure function of the edge set — no arithmetic convention to
+preserve; ~16 MB at the bound, the same order as a broadcast build);
+above it the distributed round loops run unchanged.  _collect_within is
+the only way a graph operator reaches the driver: edge lists and seed
+sets alike pass its cached limit-probe, seed sets under this bound
+unless their site has its own (GRAPH_DRIVER_MAX_WORK, random_walks'
+100 000 seeds)."""
 
 GRAPH_DRIVER_MAX_WORK = 50_000_000
 """Second bound for the per-seed fast paths (_seed_bfs,
@@ -3612,15 +3636,9 @@ def lsh_eval(
     the truth join is the documented exact-join path (refusal-guarded
     upstream); the three counts reduce to one row via one-row
     crossJoins — no collect."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # r6 (guide §2.6 overlap independent jobs): the candidate chain
-    # (band membership → buckets → self-join) and the truth chain
-    # (shingle self-join at threshold) are independent eager-checkpoint
-    # builds — running them from two driver threads lets one chain's
-    # tasks back-fill the other's stragglers.  Results identical.
+    # overlap: the candidate chain (band membership → buckets →
+    # self-join) and the truth chain (shingle self-join at threshold) are
+    # independent eager-checkpoint builds
     def _build_cand():
         mem = _pin(_band_membership(docs, k, n))
         ok = minhash_lsh_buckets(
@@ -3659,13 +3677,7 @@ def lsh_eval(
             df.unpersist()
         return out
 
-    # inheritable_thread_target: each thread's jobs keep the caller's
-    # job group and tags
-    spark = docs.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_cand = ex.submit(inheritable_thread_target(spark)(_build_cand))
-        f_truth = ex.submit(inheritable_thread_target(spark)(_build_truth))
-        cand, truth = f_cand.result(), f_truth.result()
+    cand, truth = overlap(docs.sparkSession, _build_cand, _build_truth)
     return _eval_counts_card(truth, cand, ["doc_a", "doc_b"])
 
 
@@ -4111,13 +4123,10 @@ def dedup_components_prefix(
     pairs = jaccard_prefix_pairs(
         docs, threshold, max_prefix_df=max_prefix_df, cache_handle=handle
     )
-    edges = (
-        pairs.select(F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo"))
-        .localCheckpoint()
+    edges = pairs.select(F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo"))
+    return _lss_components(
+        docs, edges, max_iter, "dedup_components_prefix", release=handle
     )
-    for df in handle:
-        df.unpersist()
-    return _lss_components(docs, edges, max_iter, "dedup_components_prefix")
 
 
 def dedup_components_editdist(
@@ -4138,13 +4147,10 @@ def dedup_components_editdist(
     pairs = editdist_pairs(
         docs, max_d=max_d, q=q, text_col=text_col, cache_handle=handle
     )
-    edges = (
-        pairs.select(F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo"))
-        .localCheckpoint()
+    edges = pairs.select(F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo"))
+    return _lss_components(
+        docs, edges, max_iter, "dedup_components_editdist", release=handle
     )
-    for df in handle:
-        df.unpersist()
-    return _lss_components(docs, edges, max_iter, "dedup_components_editdist")
 
 
 def nfc_normalize(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -6152,73 +6158,27 @@ def dedup_components(
     n: int = 3,
     min_intersection: int = 2,
     max_shingle_freq: int = 100,
-    max_iter: int = 15,
+    max_iter: int = 25,
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the n-gram
-    Jaccard candidate graph, via iterative min-label propagation
-    (label(v) ← min(label(v), min over neighbors) until fixpoint).
+    Jaccard candidate graph (jaccard_pairs edges) via the alternating
+    large-star/small-star solver, _lss_components — O(log n) rounds
+    regardless of graph diameter, every round's shuffle keyed on node id
+    with per-node output degree bounded by the star contraction.
 
     Output: (doc_id, component) where component = min doc_id in the
-    connected component — exactly reproducible in SQL with a recursive
-    transitive closure, so the driver value-checks it.
-
-    Scale: each round is one shuffle on doc_id; rounds = graph diameter
-    (near-dup clusters are near-cliques → a handful).  At 10^12 nodes
-    switch to the large-star/small-star variant; the loop structure is
-    identical."""
-    _shingle_cache: list = []
+    connected component (bigint), one row per doc, isolated docs
+    labelling themselves — exactly reproducible in SQL with a recursive
+    transitive closure, so the driver value-checks it.  max_iter bounds
+    the star rounds; a graph the loop cannot contract within it raises
+    instead of returning wrong labels."""
+    handle: list = []
     edges = jaccard_pairs(
-        docs, n, min_intersection, max_shingle_freq, cache_handle=_shingle_cache
-    ).select("doc_a", "doc_b")
-    sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .cache()
+        docs, n, min_intersection, max_shingle_freq, cache_handle=handle
+    ).select(F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo"))
+    return _lss_components(
+        docs, edges, max_iter, "dedup_components", release=handle
     )
-    labels = docs.select("doc_id", F.col("doc_id").alias("component"))
-    changed = 0
-    for _ in range(max_iter):
-        neigh_min = (
-            sym.join(labels, sym.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("nid"))
-            .agg(F.min("component").alias("nmin"))
-        )
-        # localCheckpoint: eager + truncates lineage — without it every
-        # round's plan nests the previous rounds' joins and analysis time
-        # explodes exponentially
-        new_labels = (
-            labels.join(neigh_min, labels.doc_id == F.col("nid"), "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("nl")
-            .join(labels.alias("ol"), "doc_id")
-            .filter(F.col("nl.component") != F.col("ol.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    sym.unpersist()
-    for _df in _shingle_cache:
-        _df.unpersist()
-    if changed != 0:
-        # a chain with graph diameter > max_iter would otherwise return
-        # silently wrong labels (diverging from the transitive-closure
-        # oracle); fail loudly — callers raise max_iter, they don't guess
-        raise RuntimeError(
-            f"dedup_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter"
-        )
-    return labels.select("doc_id", F.col("component").cast("long").alias("component"))
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -6251,98 +6211,68 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return to_min.unionByName(center).distinct()
 
 
-def dedup_components_lss(
-    docs: DataFrame,
-    n: int = 3,
-    min_intersection: int = 2,
-    max_shingle_freq: int = 100,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Near-duplicate clusters via the ALTERNATING large-star/small-star
-    algorithm — the 10^12-node variant of dedup_components: O(log n) rounds
-    regardless of graph diameter (min-label propagation needs O(diameter)
-    rounds), and every round's shuffle is keyed on node id with per-node
-    output degree bounded by the star contraction.
-
-    Same output contract as dedup_components ((doc_id, component=min id in
-    component), same DuckDB transitive-closure oracle); chain-graph test
-    exercises the diameter >> rounds case.
-
-    Convergence check (VERDICT r2 #9, one job per round instead of three):
-    each round computes a commutative (count, xxhash64-sum) digest of the
-    edge set — the previous round's digest is remembered, so no job ever
-    re-touches the old edges.  A digest match triggers ONE exact exceptAll
-    confirmation (runs once, at the stable round) so a 2^-64 hash collision
-    can never silently truncate the contraction."""
-    _shingle_cache: list = []
-    edges = jaccard_pairs(
-        docs, n, min_intersection, max_shingle_freq, cache_handle=_shingle_cache
-    ).select(
-        F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo")
-    ).distinct().localCheckpoint()
-    for _df in _shingle_cache:  # localCheckpoint is eager — shingles done
-        _df.unpersist()
-    return _lss_components(docs, edges, max_iter, "dedup_components_lss")
-
-
 def _lss_components(
-    docs: DataFrame, edges: DataFrame, max_iter: int, opname: str
+    docs: DataFrame,
+    edges: DataFrame,
+    max_iter: int,
+    opname: str,
+    release: Iterable[DataFrame] = (),
 ) -> DataFrame:
-    """Alternating large-star/small-star contraction over canonical
-    (hi > lo) edges; returns (doc_id, component = min id in component)
+    """Connected components of canonical (hi > lo) edges: the one
+    components solver every dedup_components* composition hands its lazy
+    edge frame to.  Returns (doc_id, component = min id in component)
     covering EVERY doc (isolated docs label themselves).
 
-    r6 adaptive path (guide §8 — decide with small rows): the component
-    labels depend ONLY on the edge list, which every caller has already
-    localCheckpointed (it is materialized and small relative to the
-    corpus: near-dup edges, not documents).  When it provably fits
+    The edge list is localCheckpointed here, once; that job is eager, so
+    the caller's pinned intermediates (`release`) are unpersisted right
+    after it.  The labels depend ONLY on the edge list (near-dup edges,
+    small relative to the corpus): when it provably fits
     GRAPH_DRIVER_MAX_EDGES (_collect_within, the cached limit-probe) it
-    is collected once and solved with exact min-root union-find —
+    is collected once and solved on the driver by _min_root_labels —
     identical labels by definition (component = min reachable id is the
     unique transitive closure, engine-independent), zero per-round jobs.
-    The star loop — the 10^12-edge design — runs verbatim above the
-    bound."""
-    pdf = _collect_within(edges.select("hi", "lo"), GRAPH_DRIVER_MAX_EDGES)
+    Above the bound _star_roots — the 10^12-edge design — runs."""
+    edges = edges.localCheckpoint()
+    for df in release:
+        df.unpersist()
+    pdf = _collect_within(edges, GRAPH_DRIVER_MAX_EDGES)
     if pdf is not None:
-        parent: dict = {}
-
-        def _find(x: int) -> int:
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for hi, lo in zip(pdf["hi"].tolist(), pdf["lo"].tolist()):
-            ra, rb = _find(int(hi)), _find(int(lo))
-            if ra != rb:
-                # always attach the LARGER root under the smaller so the
-                # root IS the component's min id
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        nodes = set(pdf["hi"].tolist()) | set(pdf["lo"].tolist())
-        lab = pd.DataFrame(
-            {
-                "doc_id": [int(v) for v in sorted(nodes)],
-                "component": [_find(int(v)) for v in sorted(nodes)],
-            },
-            dtype="int64",
+        nodes, component = _min_root_labels(
+            pdf["hi"].to_numpy(dtype=np.int64), pdf["lo"].to_numpy(dtype=np.int64)
         )
-        spark = docs.sparkSession
-        lab_df = spark.createDataFrame(lab, schema="doc_id bigint, component bigint")
-        # keep docs' own doc_id dtype (the star-loop path does) — the
-        # equi-join coerces for comparison without changing the column
-        return docs.select("doc_id").join(
-            F.broadcast(lab_df), "doc_id", "left"
-        ).select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id"))
-            .cast("long")
-            .alias("component"),
+        labels = F.broadcast(
+            docs.sparkSession.createDataFrame(
+                pd.DataFrame({"hi": nodes, "component": component}),
+                schema="hi bigint, component bigint",
+            )
         )
+    else:
+        labels = _star_roots(edges, max_iter, opname)
+    # keep docs' own doc_id dtype — the equi-join coerces for comparison
+    # without changing the column
+    return docs.select("doc_id").join(
+        labels, docs["doc_id"] == labels["hi"], "left"
+    ).select(
+        "doc_id",
+        F.coalesce(F.col("component"), F.col("doc_id"))
+        .cast("long")
+        .alias("component"),
+    )
+
+
+def _star_roots(edges: DataFrame, max_iter: int, opname: str) -> DataFrame:
+    """(hi, component) for every non-root node: the alternating
+    large-star/small-star contraction (Kiveris et al., SoCC 2014) run to
+    the edge-set fixpoint, where each node's one edge points at its
+    component's min.
+
+    Convergence check (one job per round instead of three): each round
+    computes a commutative (count, xxhash64-sum) digest of the edge set —
+    the previous round's digest is remembered, so no job ever re-touches
+    the old edges.  A digest match triggers ONE exact exceptAll
+    confirmation (runs once, at the stable round) so a 2^-64 hash
+    collision can never silently truncate the contraction; no fixpoint
+    within max_iter rounds raises."""
 
     def _digest(df):
         # pmod before the sum: raw xxhash64 sums overflow LongType (ANSI
@@ -6371,15 +6301,7 @@ def _lss_components(
             break
     else:
         raise RuntimeError(f"{opname} did not converge in {max_iter} rounds")
-    roots = edges.groupBy("hi").agg(F.min("lo").alias("component"))
-    return docs.select("doc_id").join(
-        roots, docs["doc_id"] == roots["hi"], "left"
-    ).select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id"))
-        .cast("long")
-        .alias("component"),
-    )
+    return edges.groupBy("hi").agg(F.min("lo").alias("component"))
 
 
 def dedup_components_minhash(
@@ -6403,8 +6325,8 @@ def dedup_components_minhash(
     recursive transitive closure over the same star edges."""
     # membership feeds BOTH the hub aggregation and the edge join —
     # persist it so the shingle→signature aggregation runs once, not
-    # twice; the eager localCheckpoint on edges below materializes it,
-    # after which it is released
+    # twice; _lss_components releases it once its eager edge checkpoint
+    # has materialized it
     membership = _pin(_band_membership(docs, k, n))
     # hub selection IS minhash_lsh_buckets over the shared membership —
     # one definition of bucket/cap semantics, never a drifting copy
@@ -6419,10 +6341,10 @@ def dedup_components_minhash(
             F.col("doc_id").alias("hi"), F.col("min_doc_id").alias("lo")
         )
         .distinct()
-        .localCheckpoint()
     )
-    membership.unpersist()
-    return _lss_components(docs, edges, max_iter, "dedup_components_minhash")
+    return _lss_components(
+        docs, edges, max_iter, "dedup_components_minhash", release=[membership]
+    )
 
 
 def dedup_components_simhash(
@@ -6458,7 +6380,7 @@ def dedup_components_simhash(
     # pairs emit doc_id_a < doc_id_b; the LSS convention is (hi, lo)
     edges = pairs.select(
         F.col("doc_id_b").alias("hi"), F.col("doc_id_a").alias("lo")
-    ).localCheckpoint()
+    )
     return _lss_components(docs, edges, max_iter, "dedup_components_simhash")
 
 
@@ -6489,9 +6411,7 @@ def dedup_components_embedding(
         rescore=rescore,
     )
     # id_a < id_b by the join condition; LSS wants (hi, lo)
-    edges = pairs.select(
-        F.col("id_b").alias("hi"), F.col("id_a").alias("lo")
-    ).localCheckpoint()
+    edges = pairs.select(F.col("id_b").alias("hi"), F.col("id_a").alias("lo"))
     nodes = emb.select(F.col("vec_id").alias("doc_id"))
     out = _lss_components(nodes, edges, max_iter, "dedup_components_embedding")
     return out.select(F.col("doc_id").alias("vec_id"), "component")
@@ -6945,6 +6865,30 @@ def _factorize(*arrays: np.ndarray) -> tuple:
     nodes, inv = np.unique(np.concatenate(arrays), return_inverse=True)
     cuts = np.cumsum([len(a) for a in arrays])[:-1]
     return (nodes, *np.split(inv.astype(np.int64, copy=False), cuts))
+
+
+def _min_root_labels(hi: np.ndarray, lo: np.ndarray) -> tuple:
+    """(nodes, component): every node of the edge list with the min id
+    of its connected component — union-find by vectorized root hooking.
+    Codes are sorted ids (_factorize), and a root only ever hooks under
+    a smaller root, so each tree's root IS its component's min.  A round
+    compresses every node onto its root, then hooks the larger root of
+    each edge joining two trees under the smallest root it touches; it
+    stops when no edge joins two roots."""
+    nodes, hc, lc = _factorize(hi, lo)
+    parent = np.arange(nodes.size)
+    while True:
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+        rh, rl = parent[hc], parent[lc]
+        cross = rh != rl
+        if not cross.any():
+            return nodes, nodes[parent]
+        rh, rl = rh[cross], rl[cross]
+        np.minimum.at(parent, np.maximum(rh, rl), np.minimum(rh, rl))
 
 
 def knn_bruteforce(
@@ -9289,15 +9233,7 @@ def bfs_levels(
             ep["dst"].to_numpy(dtype=np.int64),
             sp_["node"].to_numpy(dtype=np.int64),
         )
-        d = np.full(nodes.size, -1, dtype=np.int64)
-        d[sc] = 0
-        for r in range(1, max_depth + 1):
-            sel = d[si] == r - 1
-            if not sel.any():
-                break
-            reached = np.unique(di[sel])
-            new = reached[d[reached] == -1]
-            d[new] = r
+        d = _bfs_dist(si, di, nodes.size, sc, max_depth)
         m = d >= 0
         pdf = pd.DataFrame({"node": nodes[m], "dist": d[m]})
         return edges.sparkSession.createDataFrame(
@@ -13062,12 +12998,8 @@ def dedup_agreement(
     r6 (guide §2.6): the two producers are independent chains — the
     SimHash side runs an eager band checkpoint at build time and the
     Jaccard side an expensive shingle self-join — so both pair sets are
-    materialized from two driver threads (the lsh_eval overlap pattern);
-    one chain's tasks back-fill the other's stragglers.  Results
-    identical."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
+    materialized from two driver threads (overlap); one chain's tasks
+    back-fill the other's stragglers.  Results identical."""
 
     def _build_ja():
         handle: list = []
@@ -13096,13 +13028,7 @@ def dedup_agreement(
             F.lit(1).alias("in_b"),
         ).localCheckpoint()
 
-    # inheritable_thread_target: each thread's jobs keep the caller's
-    # job group and tags
-    spark = docs.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_ja = ex.submit(inheritable_thread_target(spark)(_build_ja))
-        f_sp = ex.submit(inheritable_thread_target(spark)(_build_sp))
-        ja, sp = f_ja.result(), f_sp.result()
+    ja, sp = overlap(docs.sparkSession, _build_ja, _build_sp)
     m = ja.join(sp, ["doc_a", "doc_b"], "outer").select(
         F.coalesce("in_a", F.lit(0)).alias("ia"),
         F.coalesce("in_b", F.lit(0)).alias("ib"),
@@ -15690,23 +15616,14 @@ def hub_removal_impact(
             )
         )
 
-    # r6 (guide §2.6 overlap independent jobs): the two BFS chains are
-    # independent and latency-bound (max_depth eager checkpoint rounds
-    # each) — building them from two driver threads lets round jobs of
-    # one chain back-fill the other's stragglers.  Results identical;
-    # job descriptions are thread-local so the UI stays readable;
-    # inheritable_thread_target keeps the caller's job group and tags.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    spark = edges.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_full = ex.submit(inheritable_thread_target(spark)(card), "full", e, seeds)
-        f_cut = ex.submit(
-            inheritable_thread_target(spark)(card), "hubs_removed", e_cut, seeds_cut
-        )
-        return f_full.result().unionByName(f_cut.result())
+    # overlap: the two BFS chains are independent and latency-bound
+    # (max_depth eager checkpoint rounds each)
+    full, cut = overlap(
+        edges.sparkSession,
+        lambda: card("full", e, seeds),
+        lambda: card("hubs_removed", e_cut, seeds_cut),
+    )
+    return full.unionByName(cut)
 
 
 def quality_percentile_by_source(

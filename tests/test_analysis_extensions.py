@@ -126,24 +126,16 @@ def test_ragged_bands_raise(spark, corpus):
         )
 
 
-def test_components_match_unionfind_over_pairs(spark, corpus):
+def test_components_match_unionfind_over_pairs(
+    spark, corpus, unionfind_labels
+):
     # differential: the LSS composition must equal a driver-side union-find
     # over the exact same pair set (min-id labeling)
     docs = _docs(spark, corpus)
     pairs = A.simhash_neardup_pairs(docs, bits=48, n_bands=4).collect()
-    parent = {d: d for d, _ in corpus}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs:
-        ra, rb = find(r.doc_id_a), find(r.doc_id_b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {d: find(d) for d in parent}
+    want = unionfind_labels(
+        [(r.doc_id_a, r.doc_id_b) for r in pairs], [d for d, _ in corpus]
+    )
     got = {
         r.doc_id: r.component
         for r in A.dedup_components_simhash(docs, bits=48, n_bands=4).collect()
@@ -310,7 +302,7 @@ def test_bm25_duplicate_and_empty_terms(spark):
         A.bm25_search(df, [])
 
 
-def test_embedding_components_match_unionfind(spark):
+def test_embedding_components_match_unionfind(spark, unionfind_labels):
     import random
 
     rng = random.Random(7)
@@ -333,19 +325,9 @@ def test_embedding_components_match_unionfind(spark):
     pairs = A.embedding_neardup_lsh(
         emb, threshold=0.9, n_bands=6, band_bits=3
     ).collect()
-    parent = {v: v for v, _ in rows}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs:
-        ra, rb = find(r.id_a), find(r.id_b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {v: find(v) for v in parent}
+    want = unionfind_labels(
+        [(r.id_a, r.id_b) for r in pairs], [v for v, _ in rows]
+    )
     got = {
         r.vec_id: r.component
         for r in A.dedup_components_embedding(

@@ -3,9 +3,10 @@
 Every graph driver replay reaches the driver through
 `_collect_within(df, bound)` (a cached `_fits_within` limit-probe, then
 `toPandas`) and takes its node codes from `_factorize`.  These tests pin
-the helpers, the seed-set bound that the primitive adds to PPR,
-bfs_levels and katz, and a source guard against hand-written probes
-growing back in `functions/analysis.py`.
+the helpers, the components replay against the dict union-find it
+replaced, the seed-set bound that the primitive adds to PPR, bfs_levels
+and katz, and a source guard against hand-written probes growing back
+in `functions/analysis.py`.
 """
 
 import ast
@@ -34,6 +35,43 @@ def _count_probes(monkeypatch, df) -> list:
 
     monkeypatch.setattr(cls, "limit", limit)
     return calls
+
+
+# ------------------------------------------------- _min_root_labels
+def _replay(hi, lo) -> dict:
+    nodes, component = A._min_root_labels(hi, lo)
+    assert nodes.dtype == component.dtype == np.int64
+    return dict(zip(nodes.tolist(), component.tolist()))
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_min_root_labels_match_unionfind_on_random_graphs(
+    seed, unionfind_labels
+):
+    """Sparse to dense random graphs over scattered int64 ids, duplicate
+    edges and (hi, lo) in either order included."""
+    rng = np.random.default_rng(seed)
+    n_nodes = int(rng.integers(2, 3000))
+    n_edges = int(rng.integers(1, 2 * n_nodes))
+    ids = rng.choice(10**12, size=n_nodes, replace=False).astype(np.int64)
+    a = ids[rng.integers(0, n_nodes, n_edges)]
+    b = ids[rng.integers(0, n_nodes, n_edges)]
+    keep = a != b
+    hi, lo = np.maximum(a, b)[keep], np.minimum(a, b)[keep]
+    want = unionfind_labels(zip(hi.tolist(), lo.tolist()))
+    assert _replay(hi, lo) == want
+    assert _replay(lo, hi) == want
+
+
+def test_min_root_labels_match_unionfind_on_permuted_chain(unionfind_labels):
+    """A 100k-node path whose ids are a random permutation: diameter
+    100k, so neither hooking nor compression may stop early."""
+    ids = np.random.default_rng(7).permutation(100_000).astype(np.int64) + 5
+    a, b = ids[:-1], ids[1:]
+    hi, lo = np.maximum(a, b), np.minimum(a, b)
+    labels = _replay(hi, lo)
+    assert labels == unionfind_labels(zip(hi.tolist(), lo.tolist()))
+    assert set(labels.values()) == {5}
 
 
 # ------------------------------------------------------ _collect_within

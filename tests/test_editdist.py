@@ -176,7 +176,7 @@ def test_plan_no_cartesian_and_broadcast_weights(spark):
     assert "CartesianProduct" not in lplan, lplan
 
 
-def test_editdist_components_match_unionfind(spark):
+def test_editdist_components_match_unionfind(spark, unionfind_labels):
     """Differential: dedup_components_editdist must equal a driver-side
     union-find over the exact pair set (min-id labels, isolated strings
     label themselves)."""
@@ -192,19 +192,9 @@ def test_editdist_components_match_unionfind(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     pairs = editdist_pairs(docs, max_d=1, q=2).collect()
-    parent = {d: d for d, _ in rows}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs:
-        ra, rb = find(r.doc_a), find(r.doc_b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {d: find(d) for d in parent}
+    want = unionfind_labels(
+        [(r.doc_a, r.doc_b) for r in pairs], [d for d, _ in rows]
+    )
     got = {
         r.doc_id: r.component
         for r in dedup_components_editdist(docs, max_d=1, q=2).collect()

@@ -202,33 +202,37 @@ def test_quantized_knn_matches_python_fold(spark):
 
 # ------------------------------------------ LSS driver union-find parity
 def test_lss_driver_unionfind_matches_star_loop(spark, monkeypatch):
-    """The r6 driver union-find fast path in _lss_components must produce
+    """The driver min-root replay in _lss_components must produce
     the IDENTICAL label set as the distributed star loop (forced by
     shrinking GRAPH_DRIVER_MAX_EDGES to 0) — chain (diameter >> rounds),
-    forest and isolated-node cases in one fixture."""
+    forest, duplicate-edge and isolated-node cases in one fixture, and
+    an edgeless corpus."""
     docs = spark.createDataFrame(
         [(i,) for i in range(40)], ["doc_id"]
     )
     # chain 0-..-14, triangle 20-21-22 (via canonical hi>lo edges),
-    # star 30<-{31,32,33}, isolated 34..39
+    # star 30<-{31,32,33} with 32->30 listed twice, isolated 34..39
     edges = spark.createDataFrame(
         [(i + 1, i) for i in range(14)]
         + [(21, 20), (22, 21), (22, 20)]
-        + [(31, 30), (32, 30), (33, 30)],
+        + [(31, 30), (32, 30), (33, 30), (32, 30)],
         ["hi", "lo"],
-    ).localCheckpoint()
-    fast = {
-        (r["doc_id"], r["component"])
-        for r in A._lss_components(docs, edges, 25, "t").collect()
-    }
+    )
+    no_edges = spark.createDataFrame([], "hi bigint, lo bigint")
+
+    def labels(e):
+        return {
+            (r["doc_id"], r["component"])
+            for r in A._lss_components(docs, e, 25, "t").collect()
+        }
+
+    fast, fast_empty = labels(edges), labels(no_edges)
     monkeypatch.setattr(A, "GRAPH_DRIVER_MAX_EDGES", 0)
-    slow = {
-        (r["doc_id"], r["component"])
-        for r in A._lss_components(docs, edges, 25, "t").collect()
-    }
+    slow, slow_empty = labels(edges), labels(no_edges)
     assert fast == slow
     assert dict(fast)[14] == 0 and dict(fast)[22] == 20
-    assert dict(fast)[39] == 39
+    assert dict(fast)[32] == 30 and dict(fast)[39] == 39
+    assert fast_empty == slow_empty == {(i, i) for i in range(40)}
 
 
 # ------------------------------------------------- kcore driver parity

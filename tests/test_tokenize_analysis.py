@@ -262,19 +262,22 @@ def test_ivf_partial_probe_recall(spark):
     assert sum(recalls) / len(recalls) >= 0.3  # partial probe: bounded loss
 
 
-def test_dedup_components_nonconvergence_raises(spark):
-    """ADVICE r1: a chain whose graph diameter exceeds max_iter must fail
-    loudly, not return silently wrong component labels."""
-    from contentextractor_spark.functions.analysis import dedup_components
+def test_dedup_components_nonconvergence_raises(spark, monkeypatch):
+    """A graph the star loop cannot contract within max_iter rounds must
+    fail loudly, not return silently wrong component labels.  The driver
+    replay always converges, so GRAPH_DRIVER_MAX_EDGES = 0 forces the
+    star loop."""
+    from contentextractor_spark.functions import analysis as A
 
     # chain: doc i shares a 3-gram bridge with doc i+1 only
     rows = []
     for i in range(6):
         rows.append((i, f"bridge{i} link{i} word{i} bridge{i+1} link{i+1} word{i+1}"))
     chain = spark.createDataFrame(rows, ["doc_id", "text"])
+    monkeypatch.setattr(A, "GRAPH_DRIVER_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(chain, min_intersection=1, max_iter=1)
-    ok = dedup_components(chain, min_intersection=1, max_iter=15)
+        A.dedup_components(chain, min_intersection=1, max_iter=1)
+    ok = A.dedup_components(chain, min_intersection=1, max_iter=25)
     assert {r.component for r in ok.collect()} == {0}
 
 
@@ -392,27 +395,24 @@ def test_neardup_lsh_plan_no_cartesian(spark):
             assert "Cross" in line  # the planes crossJoin, build side = 1 row
 
 
-def test_lss_components_match_propagation_on_chain(spark):
-    """Large-star/small-star must equal min-label propagation — including on
-    a chain whose diameter exceeds the LSS round count (O(log n) rounds)."""
-    from contentextractor_spark.functions.analysis import (
-        dedup_components,
-        dedup_components_lss,
-    )
+def test_lss_components_chain_and_singleton_labels(spark, monkeypatch):
+    """dedup_components labels a chain whose diameter exceeds the star
+    round count (O(log n) rounds) with its min id and each singleton with
+    itself — on the driver replay and on the forced star loop
+    (GRAPH_DRIVER_MAX_EDGES = 0)."""
+    from contentextractor_spark.functions import analysis as A
 
     rows = [(i, f"b{i} l{i} w{i} b{i+1} l{i+1} w{i+1}") for i in range(10)]
     rows += [(100 + i, f"x{i} y{i} z{i} q{i} r{i} s{i}") for i in range(4)]  # singletons
     chain = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = sorted(
-        (r.doc_id, r.component)
-        for r in dedup_components(chain, min_intersection=1, max_iter=20).collect()
-    )
-    b = sorted(
-        (r.doc_id, r.component)
-        for r in dedup_components_lss(chain, min_intersection=1).collect()
-    )
-    assert a == b
-    assert dict(b)[9] == 0  # whole chain collapsed to the min id
+    want = [(i, 0) for i in range(10)] + [(v, v) for v in range(100, 104)]
+    for max_edges in (1_000_000, 0):
+        monkeypatch.setattr(A, "GRAPH_DRIVER_MAX_EDGES", max_edges)
+        got = sorted(
+            (r.doc_id, r.component)
+            for r in A.dedup_components(chain, min_intersection=1).collect()
+        )
+        assert got == want, max_edges
 
 
 def test_ivf_sampled_fit_full_probe_still_exact(spark):
